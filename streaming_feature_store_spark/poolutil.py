@@ -6,7 +6,7 @@ composed ingest/erase/compact lifecycle operators."""
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import ThreadPoolExecutor, as_completed
 
 
 def run_concurrent(jobs: Sequence[Callable[[], object]]) -> list[object]:
@@ -17,22 +17,34 @@ def run_concurrent(jobs: Sequence[Callable[[], object]]) -> list[object]:
     failure is surfaced: a multi-write failure raises ONE error naming
     each failed job instead of whichever happened to be submitted
     first, so a torn multi-root commit is diagnosable from the message.
+
+    ``KeyboardInterrupt`` and ``SystemExit`` — raised by a job or while
+    waiting — propagate at once and unwrapped: queued jobs are cancelled
+    and running ones are not waited for.
     """
     if not jobs:
         return []
     if len(jobs) == 1:
         return [jobs[0]()]
-    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-        futs = [pool.submit(j) for j in jobs]
-        results: list[object] = []
-        errors: list[tuple[int, BaseException]] = []
-        for i, fut in enumerate(futs):
-            try:
-                results.append(fut.result())
-            except BaseException as exc:  # noqa: BLE001 — aggregated below
-                errors.append((i, exc))
-                results.append(None)
+    pool = ThreadPoolExecutor(max_workers=len(jobs))
+    results: list[object] = [None] * len(jobs)
+    errors: list[tuple[int, Exception]] = []
+    try:
+        futs = {pool.submit(j): i for i, j in enumerate(jobs)}
+        for fut in as_completed(futs):
+            exc = fut.exception()
+            if exc is None:
+                results[futs[fut]] = fut.result()
+            elif isinstance(exc, Exception):
+                errors.append((futs[fut], exc))
+            else:
+                raise exc
+    except BaseException:
+        pool.shutdown(wait=False, cancel_futures=True)
+        raise
+    pool.shutdown()
     if errors:
+        errors.sort(key=lambda e: e[0])
         if len(errors) == 1:
             raise errors[0][1]
         summary = "; ".join(

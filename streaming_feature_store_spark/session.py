@@ -1,8 +1,10 @@
 """SparkSession factory with scale-oriented defaults.
 
-Local tests run on ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads); the same
-configs are what we would ship to a 1000-executor cluster, where only
-``spark.sql.shuffle.partitions`` (≈ 2-3× total cores) and memory sizing change.
+Local tests run on ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this
+process may run on) with a driver heap sized from the host's memory
+(``driver_heap``); the same configs are what we would ship to a
+1000-executor cluster, where only ``spark.sql.shuffle.partitions`` (≈ 2-3×
+total cores) and memory sizing change.
 
 Key choices (and why they survive a 100 TB scale-up):
 
@@ -32,14 +34,45 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "streaming-feature-store-spark"
+HEAP_CAP_MB = 16 * 1024
+HEAP_SHARE = 0.6
 
 
 def default_cpus() -> int:
-    """Parallelism used for local runs; the driver exports SPARK_GRAFT_CPUS."""
+    """Parallelism used for local runs: ``$SPARK_GRAFT_CPUS``, else the
+    CPUs this process may run on (its affinity mask, not the host's count)."""
     try:
-        return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    except ValueError:
-        return 32
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    except (KeyError, ValueError):
+        if hasattr(os, "sched_getaffinity"):
+            return len(os.sched_getaffinity(0))
+        return os.cpu_count() or 1
+
+
+def driver_heap(mem_total_mb: int) -> tuple[str, str]:
+    """``(spark.driver.memory, spark.driver.extraJavaOptions)`` for a host
+    with ``mem_total_mb`` of physical memory.
+
+    local mode runs driver+executor in ONE JVM; 8g left ~250 MB/task at 32
+    threads and GC-thrashed long catalog runs, while an unpinned 32g heap
+    produced rare tens-of-seconds full-GC pauses mid-query (measured: same
+    query 2s or 23s run-to-run). 16g PINNED (-Xms=-Xmx, no resize) with G1
+    region sizing is the stable point, so the heap is 16g where that is at
+    most HEAP_SHARE of memory. A smaller host gets HEAP_SHARE of its memory
+    and no -Xms: pre-committing most of a small host's RAM leaves too
+    little for the Python workers and the OS. On a real cluster this is
+    per-executor sizing.
+    """
+    heap_mb = min(HEAP_CAP_MB, int(mem_total_mb * HEAP_SHARE))
+    opts = "-XX:+UseG1GC -XX:G1HeapRegionSize=16m"
+    if heap_mb == HEAP_CAP_MB:
+        opts = f"-Xms{heap_mb}m {opts}"
+    return f"{heap_mb}m", opts
+
+
+def _mem_total_mb() -> int:
+    """Physical memory (``MemTotal`` of /proc/meminfo on Linux)."""
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1024 * 1024)
 
 
 def get_spark(
@@ -55,6 +88,7 @@ def get_spark(
     higher number — coalescing is cheap, splitting is not).
     """
     cpus = default_cpus()
+    heap, java_opts = driver_heap(_mem_total_mb())
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     shuffle = shuffle_partitions or int(
         os.environ.get("SPARK_SQL_SHUFFLE_PARTITIONS", str(cpus))
@@ -78,19 +112,10 @@ def get_spark(
         # cluster; AQE coalesces the small tail.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI_ENABLED", "false"))
-        # local mode runs driver+executor in ONE JVM with 32 task threads;
-        # 8g left ~250 MB/task and GC-thrashed long catalog runs, while an
-        # unpinned 32g heap produced rare tens-of-seconds full-GC pauses
-        # mid-query (measured: same query 2s or 23s run-to-run). 16g PINNED
-        # (-Xms=-Xmx, no resize) with G1 region sizing is the stable point.
-        # On a real cluster this is per-executor sizing.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", heap))
         .config(
             "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_DRIVER_JAVA_OPTS",
-                "-Xms16g -XX:+UseG1GC -XX:G1HeapRegionSize=16m",
-            ),
+            os.environ.get("SPARK_DRIVER_JAVA_OPTS", java_opts),
         )
     )
     # Opt-in connector packages (e.g. spark-avro, delta-spark jars):
