@@ -1219,12 +1219,6 @@ def erase_from_ivf_index(
         cells.filter(F.col("cell").isin(touched))
         .join(broadcast(ids), "nbr_id", "left_anti")
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        survivors.write.mode("overwrite").partitionBy("cell").parquet(
-            f"{path}/cells"
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    writer = survivors.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    writer.partitionBy("cell").parquet(f"{path}/cells")
     return len(touched)

@@ -19,10 +19,12 @@ is a thin composition over the engine:
 
 Serving path. The latest view holds one row per key, so a lookup needs no
 shuffle, no broadcast and no scheduler: ``get_online`` lists the view's
-visible files with Spark's hidden-file rule, reads them on the driver with
-``pyarrow.dataset`` filtered to the requested keys, joins in Arrow and hands
-the rows back as a local DataFrame (a ``LocalRelation``: collecting it runs
-no job). The committed files are the serving surface, the way Structured
+visible files with Spark's hidden-file rule (``sinks._open_view``, which
+``upsert_latest`` reads the view through as well, so writer and reader see
+the same files), reads them on the driver with ``pyarrow.dataset``
+filtered to the requested keys, joins in Arrow and hands the rows back as
+a local DataFrame (a ``LocalRelation``: collecting it runs no job). The
+committed files are the serving surface, the way Structured
 Streaming treats a file sink's output. The one Spark job left per request
 is materialising the caller's keys frame; a keys frame built from Arrow or
 pandas is itself local, and then the lookup runs none. Not done here:
@@ -34,23 +36,22 @@ the same directory.
 
 from __future__ import annotations
 
-import json
-import os
 import time
 
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
-import pyarrow.fs as pafs
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.conversion import LocalDataToArrowConversion
-from pyspark.sql.pandas.types import from_arrow_type, to_arrow_schema
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import LongType, StructField, StructType
 
 from streaming_feature_store_spark.operators.asof import asof_join
 from streaming_feature_store_spark.registry import FeatureView
-from streaming_feature_store_spark.streaming.sinks import append_log, upsert_latest
+from streaming_feature_store_spark.streaming.sinks import (
+    _open_view, _spark_schema, append_log, upsert_latest,
+)
 
 
 def materialize(
@@ -69,61 +70,6 @@ def materialize(
     else:
         feats.write.mode("append").parquet(log_path)
     return feats
-
-
-def _hidden(name: str) -> bool:
-    """Spark's rule for path names a file-source listing skips
-    (``HadoopFSUtils.shouldFilterOutPathName``): ``.``-prefixed names and
-    ``_``-prefixed ones that are not ``col=value`` partition dirs, so
-    ``_SUCCESS``, ``_temporary/``, ``.spark-staging-*/`` and ``.crc`` files
-    are skipped while ``_bucket=N/`` is read."""
-    return (
-        name.startswith(".")
-        or (name.startswith("_") and "=" not in name)
-        or name.endswith("._COPYING_")
-    )
-
-
-def _open_view(path: str) -> ds.Dataset:
-    """The parquet files Spark would read at ``path``, as one dataset with
-    hive partition columns. pyarrow's own discovery skips every
-    ``_``-prefixed name, ``_bucket=`` dirs included, so list explicitly."""
-    fs, root = pafs.FileSystem.from_uri(path if "://" in path else os.path.abspath(path))
-    root = root.rstrip("/")
-    infos = fs.get_file_info(pafs.FileSelector(root, recursive=True))
-    files = [
-        i.path
-        for i in infos
-        if i.type == pafs.FileType.File
-        and not any(_hidden(p) for p in i.path[len(root) + 1 :].split("/"))
-    ]
-    if not files:
-        raise FileNotFoundError(f"no parquet files under {path}")
-    return ds.dataset(
-        sorted(files),
-        format="parquet",
-        filesystem=fs,
-        partitioning=ds.HivePartitioning.discover(),
-        partition_base_dir=root,
-    )
-
-
-_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def _spark_schema(view: ds.Dataset) -> StructType:
-    """The schema ``spark.read.parquet`` gives the view, from the data: the
-    Spark schema Spark writes into every parquet footer, then the partition
-    columns; all nullable, as a file scan makes them."""
-    meta = (view.schema.metadata or {}).get(_SPARK_ROW_METADATA)
-    if meta is None:
-        raise ValueError("latest view files carry no Spark schema; write them with upsert_latest")
-    fields = list(StructType.fromJson(json.loads(meta)).fields)
-    names = {f.name for f in fields}
-    fields += [
-        StructField(a.name, from_arrow_type(a.type)) for a in view.schema if a.name not in names
-    ]
-    return StructType([StructField(f.name, f.dataType, True, f.metadata) for f in fields])
 
 
 def _to_arrow(df: DataFrame) -> pa.Table:

@@ -46,9 +46,8 @@ def read_file_stream(
     live tailing (bounded batch latency), pass ``None`` for
     replay/backfill so an availableNow run drains the whole backlog as ONE
     batch — each micro-batch pays a latest-view bucket rewrite in the
-    sink, so batch count dominates backfill cost (measured in
-    tools/replay_probe.py: 2 M events end-to-end 13.7 k events/s at
-    16 files/batch vs 107.6 k single-batch)."""
+    sink, so batch count dominates backfill cost (perfbench
+    ``stream_ingest`` reports it as ``replay_events_per_s``)."""
     reader = spark.readStream.format(fmt).schema(schema).option("path", path)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -100,14 +99,13 @@ def start_feature_pipeline(
     feats = (transform or windowed_features)(events, entity_col=entity_col)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # the upsert's first action fills the cache: one stateful pass
         cached = batch_df.persist()
         try:
-            upsert_latest(spark, cached, latest_path, [entity_col])
-            # batch_id-keyed write → a retried micro-batch replaces its own
-            # partition rather than double-appending (effectively-once, T5)
-            append_log(cached, log_path, batch_id=batch_id)
+            # batch_id-keyed log write → a retried micro-batch replaces its
+            # own partition rather than double-appending (effectively-once, T5)
+            if upsert_latest(spark, cached, latest_path, [entity_col]):
+                append_log(cached, log_path, batch_id=batch_id)
         finally:
             cached.unpersist()
 

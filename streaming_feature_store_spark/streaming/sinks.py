@@ -21,11 +21,16 @@ TTL (streaming/core/sinks/redis_sink.py:96-168). Here:
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
+import pyarrow.dataset as ds
+import pyarrow.fs as pafs
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql.pandas.types import from_arrow_type
+from pyspark.sql.types import StructField, StructType
 
 
 def delta_available(spark: SparkSession) -> bool:
@@ -48,7 +53,7 @@ def _upsert_latest_delta(
     path: str,
     key_cols: list[str],
     ts_col: str,
-) -> None:
+) -> bool:
     """The Delta realization of ``upsert_latest``: a keyed ``MERGE INTO``
     with newest-``ts_col``-wins update condition. Metadata-transactional,
     concurrent-reader-safe, and at 100 TB strictly better than the parquet
@@ -58,6 +63,8 @@ def _upsert_latest_delta(
     timestamp and overwrites with identical values."""
     from delta.tables import DeltaTable
 
+    if batch_df.isEmpty():
+        return False
     w = Window.partitionBy(*key_cols).orderBy(F.desc(ts_col))
     latest_batch = (
         batch_df.withColumn("_rn", F.row_number().over(w))
@@ -66,7 +73,7 @@ def _upsert_latest_delta(
     )
     if not DeltaTable.isDeltaTable(spark, path):
         latest_batch.write.format("delta").mode("overwrite").save(path)
-        return
+        return True
     t = DeltaTable.forPath(spark, path)
     cond = " AND ".join(f"t.`{c}` = s.`{c}`" for c in key_cols)
     (
@@ -76,6 +83,7 @@ def _upsert_latest_delta(
         .whenNotMatchedInsertAll()
         .execute()
     )
+    return True
 
 
 def upsert_latest(
@@ -86,8 +94,9 @@ def upsert_latest(
     ts_col: str = "window_start_s",
     n_buckets: int = 64,
     backend: str | None = None,
-) -> None:
-    """Merge a feature micro-batch into the latest-view table at ``path``.
+) -> bool:
+    """Merge a feature micro-batch into the latest-view table at ``path``;
+    returns whether it wrote (False for an empty batch, which writes nothing).
 
     Newest ``ts_col`` per key wins; ties broken by preferring the incoming
     row (the reference's Redis HSET overwrite semantics). Idempotent: the
@@ -96,10 +105,13 @@ def upsert_latest(
     ``backend`` selects the physical realization behind the SAME call-site
     contract (default from ``$SPARK_GRAFT_SINK_BACKEND``, else parquet):
 
-    - ``parquet``: hash-bucketed by entity key (``_bucket=`` partitions),
-      merged with DYNAMIC partition overwrite — a micro-batch touching k
-      entities rewrites at most min(k, n_buckets) buckets, never the whole
-      table; at 100 TB, size n_buckets so a bucket ≈ one task.
+    - ``parquet``: ``_bucket=`` dirs by key hash, one file each; a DYNAMIC
+      partition overwrite rewrites only the touched buckets. Three Spark
+      jobs in the stream sink at any batch size: the touched-bucket collect
+      (the first action, so it fills a persisted batch's cache), one
+      shuffle by ``_bucket``, the write; a fourth where AQE is on (the
+      stream's session has it off). The count stays 64, now the largest
+      cost, until a manifest (ROADMAP item 3) can record one sized to fit.
     - ``delta``: a real keyed ``MERGE INTO`` (``_upsert_latest_delta``) —
       transactional and reader-safe; requires delta-spark + jars
       (``delta_available``), which this rig lacks, so the path is
@@ -107,47 +119,103 @@ def upsert_latest(
     """
     backend = backend or os.environ.get("SPARK_GRAFT_SINK_BACKEND", "parquet")
     if backend == "delta":
-        _upsert_latest_delta(spark, batch_df, path, key_cols, ts_col)
-        return
-    bucket = F.pmod(
-        F.xxhash64(*[F.col(c).cast("string") for c in key_cols]), F.lit(n_buckets)
-    )
+        return _upsert_latest_delta(spark, batch_df, path, key_cols, ts_col)
+    bucket = F.pmod(F.xxhash64(*[F.col(c).cast("string") for c in key_cols]), F.lit(n_buckets))
     incoming = batch_df.withColumn("_bucket", bucket).withColumn("_src", F.lit(1))
-    if os.path.exists(path):
-        touched = [r["_bucket"] for r in incoming.select("_bucket").distinct().collect()]
-        current = (
-            spark.read.parquet(path)
-            .filter(F.col("_bucket").isin(touched))  # partition-pruned read
-            .withColumn("_src", F.lit(0))
-        )
-        merged = current.unionByName(incoming, allowMissingColumns=True)
-    else:
-        merged = incoming
-    w = Window.partitionBy(*key_cols).orderBy(F.desc(ts_col), F.desc("_src"))
+    touched = [r["_bucket"] for r in incoming.select("_bucket").distinct().collect()]
+    if not touched:
+        return False
+    merged = incoming
+    current = _read_buckets(spark, path, touched)
+    if current is not None:
+        merged = current.withColumn("_src", F.lit(0)).unionByName(incoming, allowMissingColumns=True)
+    w = Window.partitionBy("_bucket", *key_cols).orderBy(F.desc(ts_col), F.desc("_src"))
     latest = (
-        merged.withColumn("_rn", F.row_number().over(w))
+        merged.repartition(min(len(touched), spark.sparkContext.defaultParallelism), "_bucket")
+        .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn", "_src")
     )
-    with _dynamic_overwrite(spark):
-        latest.write.mode("overwrite").partitionBy("_bucket").parquet(path)
+    writer = latest.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    writer.partitionBy("_bucket").parquet(path)
+    return True
 
 
-class _dynamic_overwrite:
-    """Scoped spark.sql.sources.partitionOverwriteMode=dynamic: overwrite
-    replaces only the partitions present in the written frame."""
+def _read_buckets(spark: SparkSession, path: str, buckets: list[int]) -> DataFrame | None:
+    """The view's current rows in ``buckets`` (None if it has none): the
+    files ``_open_view`` lists, under their footer schema, so Spark infers
+    no schema. Spark lists more paths than the discovery threshold in a
+    job, so the threshold covers these for this one read."""
+    if not os.path.exists(path):
+        return None
+    view = _open_view(path)
+    want = {f"_bucket={b}" for b in buckets}
+    files = [f for f in view.files if os.path.basename(os.path.dirname(f)) in want]
+    if not files:
+        return None
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(len(files)))
+    try:
+        reader = spark.read.schema(_spark_schema(view)).option("basePath", os.path.abspath(path))
+        return reader.parquet(*files)
+    finally:
+        spark.conf.set(key, prev)
 
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
 
-    def __enter__(self):
-        self.prev = self.spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+def _hidden(name: str) -> bool:
+    """Spark's rule for path names a file-source listing skips
+    (``HadoopFSUtils.shouldFilterOutPathName``): ``.``-prefixed names and
+    ``_``-prefixed ones that are not ``col=value`` partition dirs, so
+    ``_SUCCESS``, ``_temporary/``, ``.spark-staging-*/`` and ``.crc`` files
+    are skipped while ``_bucket=N/`` is read."""
+    return (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
 
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", self.prev)
+
+def _open_view(path: str) -> ds.Dataset:
+    """The parquet files Spark would read at ``path``, as one dataset with
+    hive partition columns. pyarrow's own discovery skips every
+    ``_``-prefixed name, ``_bucket=`` dirs included, so list explicitly."""
+    fs, root = pafs.FileSystem.from_uri(path if "://" in path else os.path.abspath(path))
+    root = root.rstrip("/")
+    infos = fs.get_file_info(pafs.FileSelector(root, recursive=True))
+    files = [
+        i.path
+        for i in infos
+        if i.type == pafs.FileType.File
+        and not any(_hidden(p) for p in i.path[len(root) + 1 :].split("/"))
+    ]
+    if not files:
+        raise FileNotFoundError(f"no parquet files under {path}")
+    return ds.dataset(
+        sorted(files),
+        format="parquet",
+        filesystem=fs,
+        partitioning=ds.HivePartitioning.discover(),
+        partition_base_dir=root,
+    )
+
+
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _spark_schema(view: ds.Dataset) -> StructType:
+    """The schema ``spark.read.parquet`` gives the view, from the data: the
+    Spark schema Spark writes into every parquet footer, then the partition
+    columns; all nullable, as a file scan makes them."""
+    meta = (view.schema.metadata or {}).get(_SPARK_ROW_METADATA)
+    if meta is None:
+        raise ValueError("latest view files carry no Spark schema; write them with upsert_latest")
+    fields = list(StructType.fromJson(json.loads(meta)).fields)
+    names = {f.name for f in fields}
+    fields += [
+        StructField(a.name, from_arrow_type(a.type)) for a in view.schema if a.name not in names
+    ]
+    return StructType([StructField(f.name, f.dataType, True, f.metadata) for f in fields])
 
 
 def append_log(
@@ -171,10 +239,8 @@ def append_log(
     if batch_id is None:
         d.write.mode("append").partitionBy("_date").parquet(path)
         return
-    d = d.withColumn("_batch", F.lit(batch_id))
-    spark = batch_df.sparkSession
-    with _dynamic_overwrite(spark):
-        d.write.mode("overwrite").partitionBy("_batch", "_date").parquet(path)
+    writer = d.withColumn("_batch", F.lit(batch_id)).write.mode("overwrite")
+    writer.option("partitionOverwriteMode", "dynamic").partitionBy("_batch", "_date").parquet(path)
 
 
 def _partition_cols(path: str) -> list[str]:

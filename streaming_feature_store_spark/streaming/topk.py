@@ -31,8 +31,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from streaming_feature_store_spark.streaming.sinks import _dynamic_overwrite
-
 
 def trending_topk_stream(
     spark: SparkSession,
@@ -74,12 +72,8 @@ def trending_topk_stream(
             batch_df.withColumn("rank", F.row_number().over(rank_w))
             .filter(F.col("rank") <= k)
         )
-        with _dynamic_overwrite(spark):
-            (
-                ranked.write.mode("overwrite")
-                .partitionBy("window_start_s")
-                .parquet(out_path)
-            )
+        writer = ranked.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        writer.partitionBy("window_start_s").parquet(out_path)
 
     writer = counts.writeStream.outputMode("append").foreachBatch(sink)
     if checkpoint:

@@ -3,7 +3,10 @@ re-typing, and M16 in-pipeline scoring (model applied inside foreachBatch —
 no HTTP hop, unlike the reference's stream_processor.py:222-246)."""
 
 import datetime as dt
+import json
 import os
+import shutil
+from pathlib import Path
 
 import pyspark.sql.functions as F
 
@@ -58,6 +61,129 @@ def test_upsert_latest_backends(spark, tmp_path, backend):
     assert got[3] == (100, 30.0)   # older incoming lost
     upsert_latest(spark, b2, path, ["user_id"], "window_start_s", backend=backend)
     assert snap() == got           # idempotent re-apply
+    if backend == "delta":
+        return
+
+    # an empty batch writes nothing
+    before = _view_files(path)
+    assert upsert_latest(spark, b2.limit(0), path, ["user_id"], "window_start_s") is False
+    assert _view_files(path) == before
+
+    # a key whose bucket has no dir yet gets one; other buckets keep their
+    # files byte for byte
+    new_key = next(k for k in range(4, 10_000) if f"_bucket={_bucket_of(spark, k)}" not in before)
+    b3 = spark.createDataFrame([(new_key, 300, 4.0)], "user_id long, window_start_s long, score double")
+    assert upsert_latest(spark, b3, path, ["user_id"], "window_start_s") is True
+    after = _view_files(path)
+    assert {d: f for d, f in after.items() if d in before} == before
+    (new_dir,) = set(after) - set(before)
+    assert new_dir == f"_bucket={_bucket_of(spark, new_key)}" and len(after[new_dir]) == 1
+    assert snap() == {**got, new_key: (300, 4.0)}
+
+    # leftovers of an interrupted write hold a newer row for key 2 in its
+    # bucket; the writer skips them as every reader does
+    stale = str(tmp_path / "stale")
+    spark.createDataFrame(
+        [(2, 999, -1.0)], "user_id long, window_start_s long, score double"
+    ).coalesce(1).write.parquet(stale)
+    stale_file = next(os.path.join(stale, f) for f in os.listdir(stale) if f.endswith(".parquet"))
+    for junk in ("_temporary/0", ".spark-staging-x"):
+        d = os.path.join(path, junk, f"_bucket={_bucket_of(spark, 2)}")
+        os.makedirs(d)
+        shutil.copy(stale_file, d)
+    b4 = spark.createDataFrame([(2, 300, 22.0)], "user_id long, window_start_s long, score double")
+    assert upsert_latest(spark, b4, path, ["user_id"], "window_start_s") is True
+    assert snap() == {**got, new_key: (300, 4.0), 2: (300, 22.0)}
+    assert all(len(f) == 1 for f in _view_files(path).values())  # one file per bucket
+
+
+def _bucket_of(spark, key: int) -> int:
+    """The latest-view bucket ``upsert_latest`` puts a long key in."""
+    return spark.range(1).select(
+        F.pmod(F.xxhash64(F.lit(str(key))), F.lit(64))
+    ).first()[0]
+
+
+def _view_files(path: str) -> dict[str, dict[str, bytes]]:
+    """Every visible ``_bucket=`` dir of a latest view → {file: bytes}."""
+    return {
+        d: {
+            f.name: f.read_bytes()
+            for f in Path(path, d).iterdir()
+            if f.name.endswith(".parquet")
+        }
+        for d in os.listdir(path)
+        if d.startswith("_bucket=")
+    }
+
+
+def test_stream_sink_runs_stateful_plan_once_within_job_budget(spark, tmp_path, monkeypatch):
+    """One micro-batch of ``start_feature_pipeline`` onto an existing
+    64-bucket view: the stateful plan runs once, and ``upsert_latest`` runs
+    at most 3 Spark jobs, none of them a parallel file listing."""
+    import streaming_feature_store_spark.streaming.pipeline as pipeline
+    from streaming_feature_store_spark.streaming.pipeline import (
+        read_file_stream,
+        start_feature_pipeline,
+        windowed_features,
+    )
+    from tests.test_streaming import SCHEMA, _write_batch
+
+    sc = spark.sparkContext
+    latest, log, src = (str(tmp_path / n) for n in ("latest", "log", "src"))
+    seed = [(u, u, BASE, 1.0, "view") for u in range(1000)]
+    upsert_latest(spark, windowed_features(spark.createDataFrame(seed, SCHEMA)), latest, ["user_id"])
+    assert len(_view_files(latest)) == 64
+    later = BASE + dt.timedelta(minutes=10)
+    _write_batch(spark, src, [(u, u, later, 2.0, "click") for u in range(300)])
+
+    store = sc._jsc.sc().statusStore()
+    calls = []
+
+    def budgeted(spark_, batch, *args, **kwargs):
+        group = f"upsert-{len(calls)}"
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            wrote = upsert_latest(spark_, batch, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+        descs = []
+        for j in sc.statusTracker().getJobIdsForGroup(group):
+            d = store.job(j).description()
+            descs.append(d.get() if d.isDefined() else "")
+        calls.append((wrote, descs))
+        return wrote
+
+    monkeypatch.setattr(pipeline, "upsert_latest", budgeted)
+    q = start_feature_pipeline(
+        spark,
+        read_file_stream(spark, src, SCHEMA),
+        latest,
+        log,
+        checkpoint=str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
+
+    written = [descs for wrote, descs in calls if wrote]
+    assert len(written) == 1, calls
+    assert len(written[0]) <= 3, written[0]
+    assert not any(d.startswith("Listing leaf files") for d in written[0]), written[0]
+    # the state operator's row metrics add up over every execution of
+    # the batch's plan: a second pass counts its rows again
+    (state,) = [
+        json.loads(p.json)["stateOperators"][0]
+        for p in q.recentProgress
+        if p.numInputRows
+    ]
+    emitted = spark.read.parquet(log).count()
+    assert emitted == 300 * 5  # 5 sliding windows per event
+    assert state["numRowsUpdated"] == state["numRowsTotal"] == emitted, state
+    view = spark.read.parquet(latest)
+    assert view.count() == view.select("user_id").distinct().count() == 1000
+    newest = view.agg(F.max("window_start_s")).first()[0]
+    fresh = view.filter(F.col("window_start_s") == newest).select("user_id")
+    assert sorted(r[0] for r in fresh.collect()) == list(range(300))
 
 
 def test_retention_delete(spark, tmp_path):

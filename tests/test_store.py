@@ -1,7 +1,8 @@
 """The store façade: ``get_online``'s driver-side serving path (parity with
 the J3 ``point_lookup`` right join on both registry views, Spark's
-hidden-file rule, the Spark jobs a lookup schedules) and the total order
-``latest_from_log`` puts on a stream-written feature log."""
+hidden-file rule for reader and writer, the Spark jobs a lookup schedules)
+and the total order ``latest_from_log`` puts on a stream-written feature
+log."""
 
 import datetime as dt
 import os
@@ -105,6 +106,15 @@ def test_get_online_matches_point_lookup(spark, tmp_path, view_name):
         os.makedirs(os.path.join(latest, junk))
         shutil.copy(some_file, os.path.join(latest, junk, "part-00000-junk.parquet"))
     assert _assert_parity(spark, latest, long_keys, view) == after
+
+    # ... and to the writer, which lists the view with the same rule: an
+    # upsert with them in place still leaves one row per key
+    ts = view.timestamp_field
+    bump = spark.read.parquet(latest).drop("_bucket").filter(F.col("user_id").isin(KNOWN[:2]))
+    bump = spark.createDataFrame(bump.withColumn(ts, F.col(ts) + 600).collect(), bump.schema)
+    upsert_latest(spark, bump, latest, ["user_id"], ts)
+    final = _assert_parity(spark, latest, long_keys, view)
+    assert final != after
 
 
 def test_get_online_spark_jobs(spark, tmp_path):

@@ -1,6 +1,6 @@
 """Sustained-load freshness soak with a mid-run restart (VERDICT r6 #5).
 
-`tools/freshness_probe.py` measures steady-state event→queryable
+perfbench `stream_ingest` measures steady-state event→queryable
 freshness; the reference's uptime/freshness SLOs (its README "~15 s
 end-to-end", "99.9% uptime") are steady-state numbers too.  This probe
 measures what neither does: the freshness COST OF A RECOVERY.  It runs
@@ -143,11 +143,10 @@ def main():
         )
 
         def sink(batch_df, batch_id):
-            if batch_df.isEmpty():
-                return
             cached = batch_df.persist()
             try:
-                upsert_latest(spark, cached, latest, ["user_id"])
+                if not upsert_latest(spark, cached, latest, ["user_id"]):
+                    return
                 visible = time.time()
                 rows = cached.select("last_event_us").collect()
                 with lock:
