@@ -118,40 +118,19 @@ def get_spark(
             os.environ.get("SPARK_DRIVER_JAVA_OPTS", java_opts),
         )
     )
-    # Opt-in connector packages (e.g. spark-avro, delta-spark jars):
+    # Opt-in connector packages (e.g. the spark-avro jar):
     #   SPARK_GRAFT_EXTRA_PACKAGES="org.apache.spark:spark-avro_2.13:4.1.2"
     # Resolved from Maven at session start where the environment has network
-    # access; this rig is offline, so the Avro/Delta paths stay import-gated
-    # and their tests skip (see tests/test_avro.py, test_sinks_metrics.py).
+    # access; offline, the Avro column codec stays import-gated and its jar
+    # test skips (tests/test_avro.py).
     extra_pkgs = os.environ.get("SPARK_GRAFT_EXTRA_PACKAGES", "")
     if extra_pkgs:
         builder = builder.config("spark.jars.packages", extra_pkgs)
-    # AQE initial-partition headroom stays an ENV OVERRIDE, factor 1 by
-    # default: the round-7 clean A/B (tools/aqe_ab_probe.py, reps=3 min,
-    # /tmp/aqe_ab_sf{01,1_clean}.jsonl) showed the r6 "factor 4 fixes
-    # the sf1.0 dedup spill tail" finding was mostly one-shot stall
-    # noise — under clean measurement factor 4 is neutral on the dedup
-    # family and REGRESSES q119 ~2x at sf1.0 (5.1s -> 9.9s: 128 initial
-    # partitions quadruple the task rounds of every stage AQE cannot
-    # coalesce, e.g. post-cache window stages). The real lever is
-    # cached-plan coalescing below, which wins on its own at BOTH
-    # scales. Set SPARK_GRAFT_AQE_INITIAL_FACTOR>1 only for genuinely
-    # skew-bound deployments where oversized partitions spill before
-    # AQE can split them.
-    try:
-        aqe_factor = int(os.environ.get("SPARK_GRAFT_AQE_INITIAL_FACTOR", "1"))
-    except ValueError:
-        aqe_factor = 1
-    if aqe_factor > 1:
-        builder = builder.config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(shuffle * aqe_factor),
-        )
     # DEFAULT (round 7): let AQE coalesce CACHED plan output. Without
     # this, InMemoryRelation pins the pre-AQE shuffle partition count
     # and every consumer of a persisted intermediate pays
     # static-partition tiny-task rounds. Measured A/B (min of 3,
-    # tools/aqe_ab_probe.py): sf0.1 q101 2.05s->1.15s, q119
+    # PERFORMANCE.md "Round-7"): sf0.1 q101 2.05s->1.15s, q119
     # 4.32s->2.78s, q67 3.00s->2.44s; sf1.0 q119 5.09s->4.86s, q39
     # 6.51s->5.43s, rest within noise — faster than the r6 baseline on
     # every probed query at both scales, with no knob. Trade-off: a

@@ -103,6 +103,48 @@ def _latest_snapshot(index_root: str, batch_id: int | None) -> int | None:
     return max(versions) if versions else None
 
 
+def _snapshot_sink(root: str, step, side_root: str | None = None):
+    """The ``foreachBatch`` handler every batch-id-versioned index sink
+    shares.  ``step(batch_df, prev)`` folds the micro-batch into ``prev``,
+    the newest committed snapshot with version ≤ batch_id (None on day
+    0), and returns the updated index, or ``(updated, side)`` when
+    ``side_root`` is given.  The side output lands as
+    ``side_root/batch=<batch_id>``, then the index as
+    ``root/v=<batch_id+1>``, so a committed snapshot means the whole batch
+    is written.  An empty batch writes nothing.
+
+    Exactly-once under foreachBatch retries without transactions:
+
+    - ``_latest_snapshot`` filters to versions ≤ batch_id, so a retried
+      batch re-reads the PRE-batch snapshot even if its crashed attempt
+      already wrote ``v=<id+1>``;
+    - both writes are ``mode=overwrite`` into batch-derived paths, so a
+      retry overwrites its own partial output instead of duplicating.
+
+    Snapshot-versioned indexes also give readers isolation (a concurrent
+    job keeps reading v=N while v=N+1 lands) at the cost of retaining old
+    versions — bound them with :func:`prune_snapshots`."""
+
+    def _handle(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        v = _latest_snapshot(root, batch_id)
+        prev = (
+            None
+            if v is None
+            else batch_df.sparkSession.read.parquet(f"{root}/v={v}")
+        )
+        updated = step(batch_df, prev)
+        if side_root is not None:
+            updated, side = updated
+            side.write.mode("overwrite").parquet(
+                f"{side_root}/batch={batch_id}"
+            )
+        updated.write.mode("overwrite").parquet(f"{root}/v={batch_id + 1}")
+
+    return _handle
+
+
 def minhash_index_sink(
     index_root: str,
     pairs_root: str,
@@ -117,24 +159,12 @@ def minhash_index_sink(
     micro-batch of documents is merged against the persisted MinHash
     index (``operators.dedup.minhash_index_merge``) — new near-dup pairs
     land under ``pairs_root/batch=<id>``, the upserted index becomes a
-    NEW snapshot ``index_root/v=<id+1>``.
+    NEW snapshot ``index_root/v=<id+1>``.  Exactly-once under
+    foreachBatch retries by the shared :func:`_snapshot_sink` rule.
 
-    Exactly-once under foreachBatch retries without transactions, by
-    versioning on the deterministic batch_id:
-
-    - the merge reads the newest snapshot with version ≤ batch_id — a
-      retried batch re-reads the PRE-batch snapshot even if the crashed
-      attempt already wrote ``v=<id+1>``;
-    - both writes are ``mode=overwrite`` into batch-derived paths, so a
-      retry overwrites its own partial output instead of duplicating.
-
-    Snapshot-versioned indexes also give readers isolation for free (a
-    concurrent retrieval job keeps reading v=N while v=N+1 lands) at the
-    cost of retaining old versions — compact with a retention sweep, as
-    any table format does.  The streaming ≡ batch parity contract:
-    after the stream drains, ``union(all pairs batches) ∪
-    pairs-within-first-batch ≡ minhash_near_dups(all docs)``
-    (tests/test_streaming.py).
+    The streaming ≡ batch parity contract: after the stream drains,
+    ``union(all pairs batches) ∪ pairs-within-first-batch ≡
+    minhash_near_dups(all docs)`` (tests/test_streaming.py).
     """
     from streaming_feature_store_spark.operators.dedup import (
         build_minhash_index,
@@ -142,27 +172,18 @@ def minhash_index_sink(
         minhash_index_pairs,
     )
 
-    def _handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        v = _latest_snapshot(index_root, batch_id)
-        if v is not None:
-            index = spark.read.parquet(f"{index_root}/v={v}")
-            pairs, updated = minhash_index_merge(
-                batch_df, index, text_col, id_col, n, k, bands, threshold
-            )
-        else:
+    def step(batch_df: DataFrame, prev: DataFrame | None):
+        if prev is None:
             updated = build_minhash_index(
                 batch_df, text_col, id_col, n, k, bands
             )
-            pairs = minhash_index_pairs(updated, id_col, threshold)
-        updated.write.mode("overwrite").parquet(
-            f"{index_root}/v={batch_id + 1}"
+            return updated, minhash_index_pairs(updated, id_col, threshold)
+        pairs, updated = minhash_index_merge(
+            batch_df, prev, text_col, id_col, n, k, bands, threshold
         )
-        pairs.write.mode("overwrite").parquet(
-            f"{pairs_root}/batch={batch_id}"
-        )
+        return updated, pairs
 
-    return _handle
+    return _snapshot_sink(index_root, step, pairs_root)
 
 
 def fingerprint_index_sink(
@@ -176,7 +197,7 @@ def fingerprint_index_sink(
     screened against the persisted fingerprint index snapshot — per-doc
     dup flags land under ``screen_root/batch=<id>``, the upserted index
     becomes ``index_root/v=<id+1>``.  Same retry-idempotence discipline
-    as :func:`minhash_index_sink` (shared ``_latest_snapshot``): a
+    as :func:`minhash_index_sink` (shared :func:`_snapshot_sink`): a
     retried batch re-reads the pre-batch snapshot and overwrites its own
     batch-derived outputs.  Docs arriving in the FIRST batch screen
     against an empty index (all novel) and seed snapshot v=1."""
@@ -185,36 +206,25 @@ def fingerprint_index_sink(
         fingerprint_index_merge,
     )
 
-    def _handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        v = _latest_snapshot(index_root, batch_id)
-        if v is not None:
-            index = spark.read.parquet(f"{index_root}/v={v}")
+    def step(batch_df: DataFrame, prev: DataFrame | None):
+        if prev is not None:
             screen, updated = fingerprint_index_merge(
-                batch_df, index, text_col, id_col
+                batch_df, prev, text_col, id_col
             )
-        else:
-            updated = exact_dup_groups(batch_df, text_col, id_col)
-            import pyspark.sql.functions as F
+            return updated, screen
+        import pyspark.sql.functions as F
 
-            from streaming_feature_store_spark.operators.text import (
-                fingerprint,
-            )
+        from streaming_feature_store_spark.operators.text import fingerprint
 
-            screen = fingerprint(batch_df, text_col).select(
-                id_col,
-                "fingerprint",
-                F.lit(None).cast("long").alias("match_id"),
-                F.lit(False).alias("is_corpus_dup"),
-            )
-        updated.write.mode("overwrite").parquet(
-            f"{index_root}/v={batch_id + 1}"
+        screen = fingerprint(batch_df, text_col).select(
+            id_col,
+            "fingerprint",
+            F.lit(None).cast("long").alias("match_id"),
+            F.lit(False).alias("is_corpus_dup"),
         )
-        screen.write.mode("overwrite").parquet(
-            f"{screen_root}/batch={batch_id}"
-        )
+        return exact_dup_groups(batch_df, text_col, id_col), screen
 
-    return _handle
+    return _snapshot_sink(index_root, step, screen_root)
 
 
 def ivf_index_sink(
@@ -227,10 +237,11 @@ def ivf_index_sink(
     its documented non-idempotent-append hole (the raw merge APPENDS to
     the cell table, so a retried batch would double its vectors): cell
     tables are batch-id-versioned snapshots ``index_root/cells/v=<id+1>``
-    under the shared ``_latest_snapshot`` discipline — a retried batch
+    under the :func:`_snapshot_sink` retry rule — a retried batch
     re-reads the PRE-batch snapshot (never a crashed attempt's v=<id+1>)
     and overwrites its own batch-derived output, so the path is
-    effectively-once without transactions.
+    effectively-once without transactions.  It keeps its own handler
+    because its snapshot is written ``partitionBy("cell")``.
 
     The FIRST non-empty batch trains the centroids
     (``_default_ivf_centroids``, deterministic for a given batch — a
@@ -470,23 +481,13 @@ def stats_index_sink(
         corpus_stats_index_merge,
     )
 
-    def _handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def step(batch_df: DataFrame, prev: DataFrame | None):
         delta = corpus_stats_index(batch_df, id_col, text_col, bigrams)
-        v = _latest_snapshot(index_root, batch_id)
-        if v is None:
-            updated = delta
-        else:
-            updated = corpus_stats_index_merge(
-                spark.read.parquet(f"{index_root}/v={v}"), delta
-            )
-        updated.write.mode("overwrite").parquet(
-            f"{index_root}/v={batch_id + 1}"
-        )
+        if prev is None:
+            return delta
+        return corpus_stats_index_merge(prev, delta)
 
-    return _handle
+    return _snapshot_sink(index_root, step)
 
 
 def postings_index_sink(
@@ -503,23 +504,13 @@ def postings_index_sink(
         postings_index_merge,
     )
 
-    def _handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def step(batch_df: DataFrame, prev: DataFrame | None):
         delta = postings_index(batch_df, id_col, text_col)
-        v = _latest_snapshot(index_root, batch_id)
-        if v is None:
-            updated = delta
-        else:
-            updated = postings_index_merge(
-                spark.read.parquet(f"{index_root}/v={v}"), delta, id_col
-            )
-        updated.write.mode("overwrite").parquet(
-            f"{index_root}/v={batch_id + 1}"
-        )
+        if prev is None:
+            return delta
+        return postings_index_merge(prev, delta, id_col)
 
-    return _handle
+    return _snapshot_sink(index_root, step)
 
 
 def line_freq_index_sink(
@@ -543,23 +534,13 @@ def line_freq_index_sink(
         line_freq_index_merge,
     )
 
-    def _handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def step(batch_df: DataFrame, prev: DataFrame | None):
         delta = line_freq_index(batch_df, id_col, text_col, line_sep)
-        v = _latest_snapshot(index_root, batch_id)
-        if v is None:
-            updated = delta
-        else:
-            updated = line_freq_index_merge(
-                spark.read.parquet(f"{index_root}/v={v}"), delta
-            )
-        updated.write.mode("overwrite").parquet(
-            f"{index_root}/v={batch_id + 1}"
-        )
+        if prev is None:
+            return delta
+        return line_freq_index_merge(prev, delta)
 
-    return _handle
+    return _snapshot_sink(index_root, step)
 
 
 def ngram_df_index_sink(
@@ -580,23 +561,13 @@ def ngram_df_index_sink(
         ngram_doc_freq_index_merge,
     )
 
-    def _handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
+    def step(batch_df: DataFrame, prev: DataFrame | None):
         delta = ngram_doc_freq_index(batch_df, n, id_col, text_col)
-        v = _latest_snapshot(index_root, batch_id)
-        if v is None:
-            updated = delta
-        else:
-            updated = ngram_doc_freq_index_merge(
-                spark.read.parquet(f"{index_root}/v={v}"), delta
-            )
-        updated.write.mode("overwrite").parquet(
-            f"{index_root}/v={batch_id + 1}"
-        )
+        if prev is None:
+            return delta
+        return ngram_doc_freq_index_merge(prev, delta)
 
-    return _handle
+    return _snapshot_sink(index_root, step)
 
 
 def decontam_hits_sink(
@@ -620,21 +591,13 @@ def decontam_hits_sink(
         decontam_hits_merge,
     )
 
-    def _handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        eval_index = spark.read.parquet(eval_index_path)
-        v = _latest_snapshot(hits_root, batch_id)
-        hits = spark.read.parquet(f"{hits_root}/v={v}") if v is not None else None
-        updated = decontam_hits_merge(
-            hits, batch_df, eval_index, n, id_col, text_col
-        )
-        updated.write.mode("overwrite").parquet(
-            f"{hits_root}/v={batch_id + 1}"
+    def step(batch_df: DataFrame, prev: DataFrame | None):
+        eval_index = batch_df.sparkSession.read.parquet(eval_index_path)
+        return decontam_hits_merge(
+            prev, batch_df, eval_index, n, id_col, text_col
         )
 
-    return _handle
+    return _snapshot_sink(hits_root, step)
 
 
 def winnow_index_sink(
@@ -663,25 +626,14 @@ def winnow_index_sink(
         winnow_index_merge,
     )
 
-    def _handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        v = _latest_snapshot(index_root, batch_id)
-        if v is None:
+    def step(batch_df: DataFrame, prev: DataFrame | None):
+        if prev is None:
             # empty index with the exact fingerprint schema: the merge
             # then yields the batch's own (delta-delta) pairs
-            index = _winnow_sel(batch_df.limit(0), text_col, id_col, k, w)
-        else:
-            index = spark.read.parquet(f"{index_root}/v={v}")
+            prev = _winnow_sel(batch_df.limit(0), text_col, id_col, k, w)
         new_pairs, updated = winnow_index_merge(
-            batch_df, index, id_col, text_col, k, w, threshold
+            batch_df, prev, id_col, text_col, k, w, threshold
         )
-        updated.write.mode("overwrite").parquet(
-            f"{index_root}/v={batch_id + 1}"
-        )
-        new_pairs.write.mode("overwrite").parquet(
-            f"{pairs_root}/batch={batch_id}"
-        )
+        return updated, new_pairs
 
-    return _handle
+    return _snapshot_sink(index_root, step, pairs_root)

@@ -8,10 +8,10 @@ Spark's NATIVE streaming sessionization (``session_window`` in a streaming
 aggregation, watermark-evicted state) remains the low-latency path — this
 sink exists for the case where the session table must live as a PERSISTED,
 queryable artifact maintained across job restarts and backfills, with the
-same batch-id-versioned snapshot discipline as the dedup/IVF indexes
-(streaming/dedup.py:38): a retried batch re-reads its pre-batch snapshot
-and overwrites its own output, so the path is effectively-once without
-transactions.
+same batch-id-versioned snapshot rule as the dedup indexes
+(``streaming.dedup._snapshot_sink``): a retried batch re-reads its
+pre-batch snapshot and overwrites its own output, so the path is
+effectively-once without transactions.
 
 The incremental contract (every indexed event before the batch's min ts)
 is VALIDATED per batch by ``session_index_merge`` — an out-of-order batch
@@ -24,7 +24,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from streaming_feature_store_spark.streaming.dedup import _latest_snapshot
+from streaming_feature_store_spark.streaming.dedup import _snapshot_sink
 
 
 def session_index_sink(
@@ -50,23 +50,14 @@ def session_index_sink(
         sessionize,
     )
 
-    def _handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        v = _latest_snapshot(index_root, batch_id)
-        if v is None:
-            updated = sessionize(batch_df, entity_col, ts_col, gap)
-        else:
-            index = spark.read.parquet(f"{index_root}/v={v}")
-            mn = batch_df.agg(
-                F.min(F.unix_micros(F.col(ts_col))).alias("m")
-            ).collect()[0]["m"]
-            updated = session_index_merge(
-                batch_df, index, int(mn), entity_col, ts_col, gap
-            )
-        updated.write.mode("overwrite").parquet(
-            f"{index_root}/v={batch_id + 1}"
+    def step(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        if prev is None:
+            return sessionize(batch_df, entity_col, ts_col, gap)
+        mn = batch_df.agg(
+            F.min(F.unix_micros(F.col(ts_col))).alias("m")
+        ).collect()[0]["m"]
+        return session_index_merge(
+            batch_df, prev, int(mn), entity_col, ts_col, gap
         )
 
-    return _handle
+    return _snapshot_sink(index_root, step)

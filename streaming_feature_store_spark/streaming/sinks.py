@@ -7,9 +7,8 @@ TTL (streaming/core/sinks/redis_sink.py:96-168). Here:
 - **latest view** = one row per entity key, newest event-time wins. Written
   idempotently per micro-batch from ``foreachBatch`` — re-processing a batch
   after restart converges to the same table (effectively-once on top of
-  Spark's checkpointing, SURVEY §2.6 T5). On parquet we rewrite the (small,
-  one-row-per-entity) table; on Delta/Iceberg this same function becomes a
-  keyed MERGE — the call-site contract is identical.
+  Spark's checkpointing, SURVEY §2.6 T5). The one realization is a parquet
+  rewrite of the key-hash buckets the batch touches (``upsert_latest``).
 - **feature log** = append-only, date-partitioned; this is the replay/
   backfill source (DesignDoc.md:129-131) and the offline training store.
 - **TTL** = retention delete: drop log partitions / latest rows older than
@@ -33,57 +32,10 @@ from pyspark.sql.pandas.types import from_arrow_type
 from pyspark.sql.types import StructField, StructType
 
 
-def delta_available(spark: SparkSession) -> bool:
-    """True iff the delta-spark python package AND the Delta jars are both
-    loadable in this session — the gate for the ``backend="delta"`` sink
-    path (same import-gate pattern as the Avro codec: public Apache-licensed
-    tooling that this rig does not ship)."""
-    try:
-        from delta.tables import DeltaTable  # noqa: F401
-
-        getattr(spark._jvm.io.delta.tables, "DeltaTable")
-        return True
-    except Exception:
-        return False
-
-
-def _upsert_latest_delta(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    path: str,
-    key_cols: list[str],
-    ts_col: str,
-) -> bool:
-    """The Delta realization of ``upsert_latest``: a keyed ``MERGE INTO``
-    with newest-``ts_col``-wins update condition. Metadata-transactional,
-    concurrent-reader-safe, and at 100 TB strictly better than the parquet
-    bucket rewrite (Delta rewrites only files containing matched keys and
-    commits atomically). Idempotent for the same reason the parquet path
-    is: re-merging an already-applied batch matches every key with an equal
-    timestamp and overwrites with identical values."""
-    from delta.tables import DeltaTable
-
-    if batch_df.isEmpty():
-        return False
-    w = Window.partitionBy(*key_cols).orderBy(F.desc(ts_col))
-    latest_batch = (
-        batch_df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    if not DeltaTable.isDeltaTable(spark, path):
-        latest_batch.write.format("delta").mode("overwrite").save(path)
-        return True
-    t = DeltaTable.forPath(spark, path)
-    cond = " AND ".join(f"t.`{c}` = s.`{c}`" for c in key_cols)
-    (
-        t.alias("t")
-        .merge(latest_batch.alias("s"), cond)
-        .whenMatchedUpdateAll(condition=f"s.`{ts_col}` >= t.`{ts_col}`")
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
-    return True
+# Latest-view buckets by key hash. Fixed: a view written with a second
+# count would be read through the wrong ``_bucket=`` dirs and keep
+# duplicate keys.
+N_BUCKETS = 64
 
 
 def upsert_latest(
@@ -92,8 +44,6 @@ def upsert_latest(
     path: str,
     key_cols: list[str],
     ts_col: str = "window_start_s",
-    n_buckets: int = 64,
-    backend: str | None = None,
 ) -> bool:
     """Merge a feature micro-batch into the latest-view table at ``path``;
     returns whether it wrote (False for an empty batch, which writes nothing).
@@ -102,25 +52,15 @@ def upsert_latest(
     row (the reference's Redis HSET overwrite semantics). Idempotent: the
     same batch applied twice yields the same table.
 
-    ``backend`` selects the physical realization behind the SAME call-site
-    contract (default from ``$SPARK_GRAFT_SINK_BACKEND``, else parquet):
-
-    - ``parquet``: ``_bucket=`` dirs by key hash, one file each; a DYNAMIC
-      partition overwrite rewrites only the touched buckets. Three Spark
-      jobs in the stream sink at any batch size: the touched-bucket collect
-      (the first action, so it fills a persisted batch's cache), one
-      shuffle by ``_bucket``, the write; a fourth where AQE is on (the
-      stream's session has it off). The count stays 64, now the largest
-      cost, until a manifest (ROADMAP item 3) can record one sized to fit.
-    - ``delta``: a real keyed ``MERGE INTO`` (``_upsert_latest_delta``) —
-      transactional and reader-safe; requires delta-spark + jars
-      (``delta_available``), which this rig lacks, so the path is
-      import-gated exactly like the Avro codec.
+    ``_bucket=`` dirs by key hash (``N_BUCKETS``), one file each; a DYNAMIC
+    partition overwrite rewrites only the touched buckets. Three Spark jobs
+    in the stream sink at any batch size: the touched-bucket collect (the
+    first action, so it fills a persisted batch's cache), one shuffle by
+    ``_bucket``, the write; a fourth where AQE is on (the stream's session
+    has it off). The fixed count of 64 is now the largest cost; it stays
+    until a manifest (ROADMAP item 3) can record one sized to fit.
     """
-    backend = backend or os.environ.get("SPARK_GRAFT_SINK_BACKEND", "parquet")
-    if backend == "delta":
-        return _upsert_latest_delta(spark, batch_df, path, key_cols, ts_col)
-    bucket = F.pmod(F.xxhash64(*[F.col(c).cast("string") for c in key_cols]), F.lit(n_buckets))
+    bucket = F.pmod(F.xxhash64(*[F.col(c).cast("string") for c in key_cols]), F.lit(N_BUCKETS))
     incoming = batch_df.withColumn("_bucket", bucket).withColumn("_src", F.lit(1))
     touched = [r["_bucket"] for r in incoming.select("_bucket").distinct().collect()]
     if not touched:

@@ -12,7 +12,6 @@ import pyspark.sql.functions as F
 
 from streaming_feature_store_spark.functions.exprs import coerce_typed_strings
 from streaming_feature_store_spark.streaming.sinks import (
-    delta_available,
     retention_delete,
     retention_drop_partitions,
     upsert_latest,
@@ -22,47 +21,34 @@ from streaming_feature_store_spark.streaming.watermarks import MetricsListener
 BASE = dt.datetime(2024, 1, 1, 0, 0, 0)
 
 
-import pytest
-
-
-@pytest.mark.parametrize("backend", ["parquet", "delta"])
-def test_upsert_latest_backends(spark, tmp_path, backend):
-    """S7 latest-view MERGE semantics hold under both physical backends:
-    newest-ts wins, untouched keys survive, re-applying a batch is a no-op
-    (idempotency). The delta case exercises a real MERGE INTO where
-    delta-spark is installed and skips cleanly elsewhere (this rig lacks
-    the jars — same environmental gate as Avro)."""
-    if backend == "delta" and not delta_available(spark):
-        pytest.skip("delta-spark not available in this rig")
-    path = str(tmp_path / f"latest_{backend}")
-    read_fmt = (lambda: spark.read.format("delta").load(path)) if backend == "delta" \
-        else (lambda: spark.read.parquet(path))
+def test_upsert_latest_merge_semantics(spark, tmp_path):
+    """S7 latest-view MERGE semantics: newest-ts wins, untouched keys
+    survive, re-applying a batch is a no-op (idempotency)."""
+    path = str(tmp_path / "latest_parquet")
 
     b1 = spark.createDataFrame(
         [(1, 100, 10.0), (2, 100, 20.0), (3, 100, 30.0)],
         "user_id long, window_start_s long, score double",
     )
-    upsert_latest(spark, b1, path, ["user_id"], "window_start_s", backend=backend)
+    upsert_latest(spark, b1, path, ["user_id"], "window_start_s")
     b2 = spark.createDataFrame(
         [(2, 200, 21.0), (3, 50, 99.0)],  # 2 newer (wins), 3 older (loses)
         "user_id long, window_start_s long, score double",
     )
-    upsert_latest(spark, b2, path, ["user_id"], "window_start_s", backend=backend)
+    upsert_latest(spark, b2, path, ["user_id"], "window_start_s")
 
     def snap():
         return {
             r["user_id"]: (r["window_start_s"], r["score"])
-            for r in read_fmt().collect()
+            for r in spark.read.parquet(path).collect()
         }
 
     got = snap()
     assert got[1] == (100, 10.0)   # untouched by batch 2
     assert got[2] == (200, 21.0)   # newer incoming won
     assert got[3] == (100, 30.0)   # older incoming lost
-    upsert_latest(spark, b2, path, ["user_id"], "window_start_s", backend=backend)
+    upsert_latest(spark, b2, path, ["user_id"], "window_start_s")
     assert snap() == got           # idempotent re-apply
-    if backend == "delta":
-        return
 
     # an empty batch writes nothing
     before = _view_files(path)

@@ -17,6 +17,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from streaming_feature_store_spark.streaming import dedup, sessions
 from streaming_feature_store_spark.streaming.pipeline import (
     read_file_stream,
     start_feature_pipeline,
@@ -1131,6 +1132,104 @@ def test_ivf_index_sink_retry_rereads_prebatch_snapshot(spark, tmp_path):
     snap = spark.read.parquet(str(tmp_path / "idx/cells/v=2"))
     ids = [r["nbr_id"] for r in snap.collect()]
     assert sorted(ids) == sorted(set(ids)) and len(ids) == 14
+
+
+def _docs_batch(spark):
+    return spark.createDataFrame(
+        [
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "the quick brown fox jumps over the lazy cat"),
+            (3, "nav bar\nspark shuffles data all day"),
+        ],
+        "doc_id long, text string",
+    )
+
+
+def _vecs_batch(spark):
+    return spark.createDataFrame(
+        _rand_vecs(8), "vec_id long, embedding array<double>"
+    )
+
+
+def _events_batch(spark):
+    return spark.createDataFrame(
+        [
+            (1, 1, BASE, 1.0, "view"),
+            (2, 1, BASE + dt.timedelta(minutes=5), 1.0, "view"),
+            (3, 2, BASE + dt.timedelta(hours=2), 2.0, "view"),
+        ],
+        SCHEMA,
+    )
+
+
+def _decontam_sink(spark, root, _side):
+    from streaming_feature_store_spark.operators.curation import (
+        decontam_index,
+    )
+
+    eval_index = f"{root}_eval"
+    decontam_index(_docs_batch(spark), n=4).write.parquet(eval_index)
+    return dedup.decontam_hits_sink(root, eval_index, n=4)
+
+
+# factory -> (handler from (spark, root, side_root), seeding batch,
+#             snapshot dir under root, writes side_root/batch=<id>)
+_SNAPSHOT_SINKS = {
+    "minhash_index_sink": (
+        lambda s, r, side: dedup.minhash_index_sink(r, side),
+        _docs_batch, "", True,
+    ),
+    "fingerprint_index_sink": (
+        lambda s, r, side: dedup.fingerprint_index_sink(r, side),
+        _docs_batch, "", True,
+    ),
+    "winnow_index_sink": (
+        lambda s, r, side: dedup.winnow_index_sink(r, side),
+        _docs_batch, "", True,
+    ),
+    "ivf_index_sink": (
+        lambda s, r, side: dedup.ivf_index_sink(r, nlist=2),
+        _vecs_batch, "/cells", False,
+    ),
+    "stats_index_sink": (
+        lambda s, r, side: dedup.stats_index_sink(r),
+        _docs_batch, "", False,
+    ),
+    "postings_index_sink": (
+        lambda s, r, side: dedup.postings_index_sink(r),
+        _docs_batch, "", False,
+    ),
+    "line_freq_index_sink": (
+        lambda s, r, side: dedup.line_freq_index_sink(r),
+        _docs_batch, "", False,
+    ),
+    "ngram_df_index_sink": (
+        lambda s, r, side: dedup.ngram_df_index_sink(r, n=3),
+        _docs_batch, "", False,
+    ),
+    "decontam_hits_sink": (_decontam_sink, _docs_batch, "", False),
+    "session_index_sink": (
+        lambda s, r, side: sessions.session_index_sink(r, "user_id"),
+        _events_batch, "", False,
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(_SNAPSHOT_SINKS))
+def test_index_sink_empty_batch_writes_nothing(spark, tmp_path, name):
+    """An empty micro-batch leaves every snapshot index sink untouched:
+    no ``v=<id+1>`` snapshot and no ``batch=<id>`` side output."""
+    make, batch, sub, has_side = _SNAPSHOT_SINKS[name]
+    root, side = str(tmp_path / "idx"), str(tmp_path / "side")
+    handle = make(spark, root, side)
+    seed = batch(spark)
+    handle(seed, 0)
+    handle(seed.limit(0), 1)
+    assert sorted(os.listdir(root + sub)) == ["v=1"]
+    if has_side:
+        assert sorted(os.listdir(side)) == ["batch=0"]
+    else:
+        assert not os.path.exists(side)
 
 
 @pytest.mark.slow
