@@ -84,8 +84,8 @@ def upsert_latest(
 def _read_buckets(spark: SparkSession, path: str, buckets: list[int]) -> DataFrame | None:
     """The view's current rows in ``buckets`` (None if it has none): the
     files ``_open_view`` lists, under their footer schema, so Spark infers
-    no schema. Spark lists more paths than the discovery threshold in a
-    job, so the threshold covers these for this one read."""
+    no schema and (the session's discovery threshold) lists them on the
+    driver."""
     if not os.path.exists(path):
         return None
     view = _open_view(path)
@@ -93,14 +93,8 @@ def _read_buckets(spark: SparkSession, path: str, buckets: list[int]) -> DataFra
     files = [f for f in view.files if os.path.basename(os.path.dirname(f)) in want]
     if not files:
         return None
-    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(len(files)))
-    try:
-        reader = spark.read.schema(_spark_schema(view)).option("basePath", os.path.abspath(path))
-        return reader.parquet(*files)
-    finally:
-        spark.conf.set(key, prev)
+    reader = spark.read.schema(_spark_schema(view)).option("basePath", os.path.abspath(path))
+    return reader.parquet(*files)
 
 
 def _hidden(name: str) -> bool:

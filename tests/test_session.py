@@ -1,4 +1,4 @@
-"""Session sizing rules, as pure functions (no JVM)."""
+"""Session sizing rules and defaults, checked without a JVM."""
 
 import os
 
@@ -28,3 +28,17 @@ def test_driver_heap_is_capped_share_of_memory_and_pinned_only_when_it_fits():
     assert "-Xms" not in driver_heap(HEAP_CAP_MB * 10 // 6 - 2)[1]
     for _, o in (driver_heap(16093), driver_heap(64 * 1024)):
         assert "-XX:+UseG1GC" in o
+
+
+def test_get_spark_adds_local_file_defaults_after_callers_classpath(monkeypatch):
+    """The spawn-free filesystem's jar is appended to a caller's driver
+    classpath, and a caller's ``configs`` still override the defaults."""
+    monkeypatch.setattr(session.SparkSession.Builder, "getOrCreate", lambda self: dict(self._options))
+    threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    opts = session.get_spark(configs={"spark.driver.extraClassPath": "extra.jar", threshold: "32"})
+    assert opts["spark.driver.extraClassPath"] == os.pathsep.join(["extra.jar", session.LOCAL_FS_JAR])
+    assert opts["spark.hadoop.fs.file.impl"] == session.LOCAL_FS
+    assert opts["spark.hadoop.fs.AbstractFileSystem.file.impl"] == f"{session.LOCAL_FS}$Fs"
+    assert opts[threshold] == "32"
+    assert session.get_spark()[threshold] == str(2**31 - 1)
+    assert os.path.isfile(session.LOCAL_FS_JAR)

@@ -148,6 +148,43 @@ def test_stream_dedup_drops_redelivered(spark, tmp_path):
     assert got.filter(F.col("event_id") == 1).count() == 1
 
 
+def test_file_stream_batch_lists_new_files_on_driver(spark, tmp_path):
+    """A micro-batch of 40 new files resolves them on the driver: Spark
+    lists more paths than its discovery threshold (default 32) in a job
+    of one task per path, which the session's threshold rules out."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "src"
+    src.mkdir()
+    arrow_schema = pa.schema(
+        [("event_id", pa.int64()), ("user_id", pa.int64()), ("ts", pa.timestamp("us", "UTC")),
+         ("value", pa.float64()), ("event_type", pa.string())]
+    )
+    for i in range(40):
+        row = [[i], [i % 7], [BASE + dt.timedelta(seconds=i)], [1.0], ["view"]]
+        pq.write_table(pa.table(row, schema=arrow_schema), src / f"part-{i:03d}.parquet")
+    q = (
+        read_file_stream(spark, str(src), SCHEMA, max_files_per_trigger=None)
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert [p.numInputRows for p in q.recentProgress if p.numInputRows] == [40]
+    # the query's jobs run under its run id as job group
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    descs = []
+    for j in sc.statusTracker().getJobIdsForGroup(str(q.runId)):
+        d = store.job(j).description()
+        descs.append(d.get() if d.isDefined() else "")
+    assert descs
+    assert not any(d.startswith("Listing leaf files") for d in descs), descs
+
+
 def test_log_append_idempotent_per_batch(spark, tmp_path):
     """A retried micro-batch must REPLACE its log partition, not
     double-append (effectively-once, T5)."""
