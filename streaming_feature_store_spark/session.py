@@ -29,7 +29,9 @@ Key choices (and why they survive a 100 TB scale-up):
   ``libhadoop``, so Hadoop's stock local filesystem sets permission bits by
   running ``chmod`` as a child process, on every file create and every
   ``mkdirs``: about 200 forks of the driver JVM (3.7 ms each from a 2 GiB
-  heap, against 0.09 ms in-process) for one 64-bucket ``upsert_latest``. ``jvm/SpawnFreeLocalFileSystem`` (jar on the
+  heap, against 0.09 ms in-process) for one ``upsert_latest`` onto a
+  64-bucket view (measured when every view had 64 buckets; a view now has
+  one per core). ``jvm/SpawnFreeLocalFileSystem`` (jar on the
   driver classpath, installed as ``fs.file.impl`` and, for the
   ``FileContext`` path of streaming checkpoints and state stores,
   ``fs.AbstractFileSystem.file.impl``) sets the same mode bits in-process

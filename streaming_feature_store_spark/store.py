@@ -19,19 +19,22 @@ is a thin composition over the engine:
 
 Serving path. The latest view holds one row per key, so a lookup needs no
 shuffle, no broadcast and no scheduler: ``get_online`` lists the view's
-visible files with Spark's hidden-file rule (``sinks._open_view``, which
-``upsert_latest`` reads the view through as well, so writer and reader see
-the same files), reads them on the driver with ``pyarrow.dataset``
+visible files with Spark's hidden-file rule (``sinks._open_view``;
+``upsert_latest`` lists with the same rule, so writer and reader see the
+same files), reads them on the driver with ``pyarrow.dataset``
 filtered to the requested keys, joins in Arrow and hands the rows back as
 a local DataFrame (a ``LocalRelation``: collecting it runs no job). The
 committed files are the serving surface, the way Structured
-Streaming treats a file sink's output. The one Spark job left per request
-is materialising the caller's keys frame; a keys frame built from Arrow or
-pandas is itself local, and then the lookup runs none. Not done here:
-bucket pruning (it needs a driver-side port of Spark's ``xxhash64``), and
-isolation from a concurrent ``upsert_latest`` — the view has no commit
-point, so a read that overlaps an upsert is no safer than a Spark scan of
-the same directory.
+Streaming treats a file sink's output. A view holds one file per bucket,
+and its bucket count is the ``defaultParallelism`` of the session that
+created it, recorded in the view (``sinks.BUCKETS_RECORD``): a request
+lists and opens that many files (4 on a 4-core host). The one Spark job
+left per request is materialising the caller's keys frame; a keys frame
+built from Arrow or pandas is itself local, and then the lookup runs
+none. Not done here: bucket pruning (it needs a driver-side port of
+Spark's ``xxhash64``), and isolation from a concurrent ``upsert_latest``
+— the view has no commit point, so a read that overlaps an upsert is no
+safer than a Spark scan of the same directory.
 """
 
 from __future__ import annotations

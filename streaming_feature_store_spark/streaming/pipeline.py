@@ -46,8 +46,10 @@ def read_file_stream(
     live tailing (bounded batch latency), pass ``None`` for
     replay/backfill so an availableNow run drains the whole backlog as ONE
     batch — each micro-batch pays a latest-view bucket rewrite in the
-    sink, so batch count dominates backfill cost (perfbench
-    ``stream_ingest`` reports it as ``replay_events_per_s``)."""
+    sink (every bucket the batch's keys touch: all of the view's recorded
+    count, one per core of the session that created it, for a batch of
+    more than a few dozen keys), so batch count dominates backfill cost
+    (perfbench ``stream_ingest`` reports it as ``replay_events_per_s``)."""
     reader = spark.readStream.format(fmt).schema(schema).option("path", path)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)

@@ -9,6 +9,10 @@ TTL (streaming/core/sinks/redis_sink.py:96-168). Here:
   after restart converges to the same table (effectively-once on top of
   Spark's checkpointing, SURVEY §2.6 T5). The one realization is a parquet
   rewrite of the key-hash buckets the batch touches (``upsert_latest``).
+  The view's bucket count is set when it is created, to the session's
+  ``defaultParallelism``, and kept in a one-line ``_buckets`` record in its
+  root (hidden from Spark's listing and ``_open_view``); every later write
+  hashes with the recorded count.
 - **feature log** = append-only, date-partitioned; this is the replay/
   backfill source (DesignDoc.md:129-131) and the offline training store.
 - **TTL** = retention delete: drop log partitions / latest rows older than
@@ -32,10 +36,11 @@ from pyspark.sql.pandas.types import from_arrow_type
 from pyspark.sql.types import StructField, StructType
 
 
-# Latest-view buckets by key hash. Fixed: a view written with a second
-# count would be read through the wrong ``_bucket=`` dirs and keep
-# duplicate keys.
-N_BUCKETS = 64
+# A latest view's bucket count, one decimal line in its root. The name is
+# ``_``-prefixed with no ``=``, so Spark's listing, ``spark.read.parquet``
+# and ``_open_view`` skip it. A view's count never changes: a write with a
+# second count would read the wrong ``_bucket=`` dirs and keep duplicate keys.
+BUCKETS_RECORD = "_buckets"
 
 
 def upsert_latest(
@@ -52,19 +57,31 @@ def upsert_latest(
     row (the reference's Redis HSET overwrite semantics). Idempotent: the
     same batch applied twice yields the same table.
 
-    ``_bucket=`` dirs by key hash (``N_BUCKETS``), one file each; a DYNAMIC
-    partition overwrite rewrites only the touched buckets. Three Spark jobs
-    in the stream sink at any batch size: the touched-bucket collect (the
-    first action, so it fills a persisted batch's cache), one shuffle by
-    ``_bucket``, the write; a fourth where AQE is on (the stream's session
-    has it off). The fixed count of 64 is now the largest cost; it stays
-    until a manifest (ROADMAP item 3) can record one sized to fit.
+    ``_bucket=`` dirs by key hash, one file each; a DYNAMIC partition
+    overwrite rewrites only the touched buckets. The bucket count belongs
+    to the view: its first write records the session's
+    ``defaultParallelism`` in ``BUCKETS_RECORD`` (tmp + rename, before any
+    data file), and every later write hashes with the recorded count,
+    whatever its own session's parallelism. The merge write runs one task
+    per touched bucket, at most ``defaultParallelism``, so more buckets
+    would add files to read, rewrite and serve but no parallelism; a live
+    batch of a few hundred keys touches every bucket either way. A view
+    with data files but no record raises instead of being rehashed.
+
+    Three Spark jobs in the stream sink at any batch size: the
+    touched-bucket collect (the first action, so it fills a persisted
+    batch's cache), one shuffle by ``_bucket``, the write; a fourth where
+    AQE is on (the stream's session has it off).
     """
-    bucket = F.pmod(F.xxhash64(*[F.col(c).cast("string") for c in key_cols]), F.lit(N_BUCKETS))
+    recorded = _recorded_buckets(path)
+    n_buckets = recorded or spark.sparkContext.defaultParallelism
+    bucket = F.pmod(F.xxhash64(*[F.col(c).cast("string") for c in key_cols]), F.lit(n_buckets))
     incoming = batch_df.withColumn("_bucket", bucket).withColumn("_src", F.lit(1))
     touched = [r["_bucket"] for r in incoming.select("_bucket").distinct().collect()]
     if not touched:
         return False
+    if recorded is None:
+        _write_bucket_record(path, n_buckets)
     merged = incoming
     current = _read_buckets(spark, path, touched)
     if current is not None:
@@ -81,28 +98,54 @@ def upsert_latest(
     return True
 
 
+def _recorded_buckets(path: str) -> int | None:
+    """The bucket count recorded in the view at ``path``; None when there
+    is no view yet. Raises for a view with data files and no record: no
+    count can be trusted to match the one its files were hashed with."""
+    fs, root = _view_fs(path)
+    try:
+        with fs.open_input_stream(f"{root}/{BUCKETS_RECORD}") as f:
+            return int(f.read().decode())
+    except FileNotFoundError:
+        if _data_files(fs, root):
+            raise ValueError(
+                f"latest view {path} has data files but no {BUCKETS_RECORD} record of "
+                "its bucket count; rebuild it from the feature log (store.replay)"
+            ) from None
+        return None
+
+
+def _write_bucket_record(path: str, n_buckets: int) -> None:
+    """Create the view at ``path`` with ``n_buckets`` buckets. The record
+    is written under a temp name and renamed, so it is whole or absent."""
+    fs, root = _view_fs(path)
+    fs.create_dir(root)
+    tmp = f"{root}/{BUCKETS_RECORD}.tmp"
+    with fs.open_output_stream(tmp) as f:
+        f.write(f"{n_buckets}\n".encode())
+    fs.move(tmp, f"{root}/{BUCKETS_RECORD}")
+
+
 def _read_buckets(spark: SparkSession, path: str, buckets: list[int]) -> DataFrame | None:
     """The view's current rows in ``buckets`` (None if it has none): the
-    files ``_open_view`` lists, under their footer schema, so Spark infers
-    no schema and (the session's discovery threshold) lists them on the
-    driver."""
-    if not os.path.exists(path):
-        return None
-    view = _open_view(path)
+    files ``_open_view`` would list there, under their footer schema, so
+    Spark infers no schema and (the session's discovery threshold) lists
+    them on the driver."""
+    fs, root = _view_fs(path)
     want = {f"_bucket={b}" for b in buckets}
-    files = [f for f in view.files if os.path.basename(os.path.dirname(f)) in want]
+    files = [f for f in _data_files(fs, root) if os.path.basename(os.path.dirname(f)) in want]
     if not files:
         return None
-    reader = spark.read.schema(_spark_schema(view)).option("basePath", os.path.abspath(path))
-    return reader.parquet(*files)
+    schema = _spark_schema(_dataset(fs, root, files))
+    return spark.read.schema(schema).option("basePath", os.path.abspath(path)).parquet(*files)
 
 
 def _hidden(name: str) -> bool:
     """Spark's rule for path names a file-source listing skips
     (``HadoopFSUtils.shouldFilterOutPathName``): ``.``-prefixed names and
     ``_``-prefixed ones that are not ``col=value`` partition dirs, so
-    ``_SUCCESS``, ``_temporary/``, ``.spark-staging-*/`` and ``.crc`` files
-    are skipped while ``_bucket=N/`` is read."""
+    ``_SUCCESS``, ``_buckets``, ``_temporary/``, ``.spark-staging-*/`` and
+    ``.crc`` files are skipped while ``_bucket=N/`` is read."""
     return (
         name.startswith(".")
         or (name.startswith("_") and "=" not in name)
@@ -110,28 +153,44 @@ def _hidden(name: str) -> bool:
     )
 
 
-def _open_view(path: str) -> ds.Dataset:
-    """The parquet files Spark would read at ``path``, as one dataset with
-    hive partition columns. pyarrow's own discovery skips every
-    ``_``-prefixed name, ``_bucket=`` dirs included, so list explicitly."""
+def _view_fs(path: str) -> tuple[pafs.FileSystem, str]:
+    """The filesystem of ``path`` and the view's root on it."""
     fs, root = pafs.FileSystem.from_uri(path if "://" in path else os.path.abspath(path))
-    root = root.rstrip("/")
-    infos = fs.get_file_info(pafs.FileSelector(root, recursive=True))
-    files = [
+    return fs, root.rstrip("/")
+
+
+def _data_files(fs: pafs.FileSystem, root: str) -> list[str]:
+    """The parquet files Spark would read under ``root``, sorted; none
+    when ``root`` does not exist."""
+    infos = fs.get_file_info(pafs.FileSelector(root, allow_not_found=True, recursive=True))
+    return sorted(
         i.path
         for i in infos
         if i.type == pafs.FileType.File
         and not any(_hidden(p) for p in i.path[len(root) + 1 :].split("/"))
-    ]
-    if not files:
-        raise FileNotFoundError(f"no parquet files under {path}")
+    )
+
+
+def _dataset(fs: pafs.FileSystem, root: str, files: list[str]) -> ds.Dataset:
+    """``files`` as one dataset with the view's hive partition columns."""
     return ds.dataset(
-        sorted(files),
+        files,
         format="parquet",
         filesystem=fs,
         partitioning=ds.HivePartitioning.discover(),
         partition_base_dir=root,
     )
+
+
+def _open_view(path: str) -> ds.Dataset:
+    """The parquet files Spark would read at ``path``, as one dataset with
+    hive partition columns. pyarrow's own discovery skips every
+    ``_``-prefixed name, ``_bucket=`` dirs included, so list explicitly."""
+    fs, root = _view_fs(path)
+    files = _data_files(fs, root)
+    if not files:
+        raise FileNotFoundError(f"no parquet files under {path}")
+    return _dataset(fs, root, files)
 
 
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
@@ -202,12 +261,13 @@ def retention_delete(
 ) -> None:
     """TTL semantics (Redis 24 h TTL → retention job): rewrite the table
     without rows older than the horizon, PRESERVING the table's partition
-    layout (inferred from the directory names) so later upsert_latest /
-    append_log merges keep their replace-only-touched-partitions
-    invariants. The rmtree+rename swap is driver-local-filesystem only and
-    not atomic for concurrent readers — on object storage use Delta/
-    Iceberg, where this is a metadata-only operation; for date-partitioned
-    logs prefer ``retention_drop_partitions`` (no rewrite at all)."""
+    layout (inferred from the directory names) and a latest view's
+    ``BUCKETS_RECORD`` so later upsert_latest / append_log merges keep
+    their replace-only-touched-partitions invariants. The rmtree+rename
+    swap is driver-local-filesystem only and not atomic for concurrent
+    readers — on object storage use Delta/Iceberg, where this is a
+    metadata-only operation; for date-partitioned logs prefer
+    ``retention_drop_partitions`` (no rewrite at all)."""
     parts = _partition_cols(path)
     df = spark.read.parquet(path)
     kept = df.filter(F.col(ts_col) >= F.lit(now_s - horizon_s))
@@ -216,6 +276,9 @@ def retention_delete(
     if parts:
         w = w.partitionBy(*parts)
     w.parquet(tmp)
+    record = os.path.join(path, BUCKETS_RECORD)
+    if os.path.exists(record):
+        shutil.copy(record, os.path.join(tmp, BUCKETS_RECORD))
     shutil.rmtree(path)
     os.rename(tmp, path)
 

@@ -190,10 +190,11 @@ _SPAWN_PROBE = textwrap.dedent(
 
 
 def test_stream_micro_batch_spawns_no_chmod(tmp_path):
-    """A session from ``get_spark`` upserts onto a 64-bucket view and runs
-    one ``start_feature_pipeline`` micro-batch without forking ``chmod``
-    (Hadoop's stock local filesystem forks one per file and dir written:
-    about 470 for this run)."""
+    """A session from ``get_spark`` upserts onto a view (2 buckets, its
+    ``local[2]`` parallelism) and runs one ``start_feature_pipeline``
+    micro-batch without forking ``chmod`` (Hadoop's stock local filesystem
+    forks one per file and dir written: about 470 for this run onto 64
+    buckets)."""
     real = shutil.which("chmod")
     assert real
     wrappers, calls = tmp_path / "bin", tmp_path / "chmod.calls"
@@ -212,7 +213,7 @@ def test_stream_micro_batch_spawns_no_chmod(tmp_path):
         cwd=REPO, env=env, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
-    assert proc.stdout.split()[-1] == "64"
+    assert proc.stdout.split()[-1] == "2"
     spawned = calls.read_text().splitlines() if calls.exists() else []
     assert spawned == [], f"{len(spawned)} chmod processes, first: {spawned[:3]}"
 

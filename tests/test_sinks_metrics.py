@@ -9,9 +9,13 @@ import shutil
 from pathlib import Path
 
 import pyspark.sql.functions as F
+import pytest
 
 from streaming_feature_store_spark.functions.exprs import coerce_typed_strings
 from streaming_feature_store_spark.streaming.sinks import (
+    BUCKETS_RECORD,
+    _recorded_buckets,
+    _write_bucket_record,
     retention_delete,
     retention_drop_partitions,
     upsert_latest,
@@ -55,15 +59,17 @@ def test_upsert_latest_merge_semantics(spark, tmp_path):
     assert upsert_latest(spark, b2.limit(0), path, ["user_id"], "window_start_s") is False
     assert _view_files(path) == before
 
-    # a key whose bucket has no dir yet gets one; other buckets keep their
-    # files byte for byte
-    new_key = next(k for k in range(4, 10_000) if f"_bucket={_bucket_of(spark, k)}" not in before)
+    # a key whose bucket has no dir yet gets one (3 keys leave one of the
+    # session's 4 buckets empty); other buckets keep their files byte for byte
+    n = _recorded_buckets(path)
+    assert n == spark.sparkContext.defaultParallelism == 4
+    new_key = next(k for k in range(4, 10_000) if f"_bucket={_bucket_of(spark, k, n)}" not in before)
     b3 = spark.createDataFrame([(new_key, 300, 4.0)], "user_id long, window_start_s long, score double")
     assert upsert_latest(spark, b3, path, ["user_id"], "window_start_s") is True
     after = _view_files(path)
     assert {d: f for d, f in after.items() if d in before} == before
     (new_dir,) = set(after) - set(before)
-    assert new_dir == f"_bucket={_bucket_of(spark, new_key)}" and len(after[new_dir]) == 1
+    assert new_dir == f"_bucket={_bucket_of(spark, new_key, n)}" and len(after[new_dir]) == 1
     assert snap() == {**got, new_key: (300, 4.0)}
 
     # leftovers of an interrupted write hold a newer row for key 2 in its
@@ -74,7 +80,7 @@ def test_upsert_latest_merge_semantics(spark, tmp_path):
     ).coalesce(1).write.parquet(stale)
     stale_file = next(os.path.join(stale, f) for f in os.listdir(stale) if f.endswith(".parquet"))
     for junk in ("_temporary/0", ".spark-staging-x"):
-        d = os.path.join(path, junk, f"_bucket={_bucket_of(spark, 2)}")
+        d = os.path.join(path, junk, f"_bucket={_bucket_of(spark, 2, n)}")
         os.makedirs(d)
         shutil.copy(stale_file, d)
     b4 = spark.createDataFrame([(2, 300, 22.0)], "user_id long, window_start_s long, score double")
@@ -83,10 +89,11 @@ def test_upsert_latest_merge_semantics(spark, tmp_path):
     assert all(len(f) == 1 for f in _view_files(path).values())  # one file per bucket
 
 
-def _bucket_of(spark, key: int) -> int:
-    """The latest-view bucket ``upsert_latest`` puts a long key in."""
+def _bucket_of(spark, key: int, n_buckets: int) -> int:
+    """The bucket ``upsert_latest`` puts a long key in, in a view that
+    records ``n_buckets``."""
     return spark.range(1).select(
-        F.pmod(F.xxhash64(F.lit(str(key))), F.lit(64))
+        F.pmod(F.xxhash64(F.lit(str(key))), F.lit(n_buckets))
     ).first()[0]
 
 
@@ -103,10 +110,74 @@ def _view_files(path: str) -> dict[str, dict[str, bytes]]:
     }
 
 
+def _upsert(spark, path, rows):
+    df = spark.createDataFrame(rows, "user_id long, window_start_s long, score double")
+    return upsert_latest(spark, df, path, ["user_id"], "window_start_s")
+
+
+def _latest_rows(spark, path) -> dict[int, tuple[int, float]]:
+    rows = spark.read.parquet(path).collect()
+    assert len(rows) == len({r["user_id"] for r in rows}), "duplicate keys"
+    return {r["user_id"]: (r["window_start_s"], r["score"]) for r in rows}
+
+
+def test_upsert_latest_hashes_with_recorded_count(spark, tmp_path):
+    """A view made with 3 buckets keeps 3 in a session of parallelism 4:
+    keys land in their ``pmod(xxhash64, 3)`` dirs, one row per key."""
+    path = str(tmp_path / "latest")
+    assert spark.sparkContext.defaultParallelism == 4
+    first = [(k, 100, float(k)) for k in range(20)]
+    spark.createDataFrame(first, "user_id long, window_start_s long, score double").withColumn(
+        "_bucket", F.pmod(F.xxhash64(F.col("user_id").cast("string")), F.lit(3)).cast("int")
+    ).coalesce(1).write.partitionBy("_bucket").parquet(path)
+    _write_bucket_record(path, 3)
+
+    _upsert(spark, path, [(k, 200, -float(k)) for k in range(10, 30)])
+    _upsert(spark, path, [(k, 300, 1.5) for k in range(25, 35)])
+
+    assert _recorded_buckets(path) == 3
+    want = {k: (100, float(k)) for k in range(10)}
+    want.update({k: (200, -float(k)) for k in range(10, 25)})
+    want.update({k: (300, 1.5) for k in range(25, 35)})
+    assert _latest_rows(spark, path) == want
+    dirs = _view_files(path)
+    assert set(dirs) == {f"_bucket={b}" for b in range(3)}
+    assert all(len(files) == 1 for files in dirs.values())
+    for r in spark.read.parquet(path).collect():
+        assert r["_bucket"] == _bucket_of(spark, r["user_id"], 3)
+
+
+def test_upsert_latest_onto_record_only_view(spark, tmp_path):
+    """A view dir holding only its record (a crash before the first data
+    file) upserts as an empty view, with the recorded count."""
+    path = str(tmp_path / "latest")
+    _write_bucket_record(path, 2)
+    assert os.listdir(path) == [BUCKETS_RECORD]
+    assert _upsert(spark, path, [(k, 100, 1.0) for k in range(10)]) is True
+    assert _latest_rows(spark, path) == {k: (100, 1.0) for k in range(10)}
+    assert set(_view_files(path)) == {"_bucket=0", "_bucket=1"}
+    assert _recorded_buckets(path) == 2
+
+
+def test_upsert_latest_refuses_view_without_record(spark, tmp_path):
+    """A view with data files but no bucket record raises, and is left as
+    it was; it is never rehashed with the session's count."""
+    path = str(tmp_path / "latest")
+    spark.createDataFrame(
+        [(1, 100, 1.0, 7)], "user_id long, window_start_s long, score double, _bucket int"
+    ).write.partitionBy("_bucket").parquet(path)
+    before = _view_files(path)
+    with pytest.raises(ValueError, match=BUCKETS_RECORD):
+        _upsert(spark, path, [(2, 100, 2.0)])
+    assert _view_files(path) == before
+    assert not os.path.exists(os.path.join(path, BUCKETS_RECORD))
+
+
 def test_stream_sink_runs_stateful_plan_once_within_job_budget(spark, tmp_path, monkeypatch):
-    """One micro-batch of ``start_feature_pipeline`` onto an existing
-    64-bucket view: the stateful plan runs once, and ``upsert_latest`` runs
-    at most 3 Spark jobs, none of them a parallel file listing."""
+    """One micro-batch of ``start_feature_pipeline`` onto an existing view
+    (one bucket per core of the session that made it): the stateful plan
+    runs once, and ``upsert_latest`` runs at most 3 Spark jobs, none of
+    them a parallel file listing."""
     import streaming_feature_store_spark.streaming.pipeline as pipeline
     from streaming_feature_store_spark.streaming.pipeline import (
         read_file_stream,
@@ -119,7 +190,7 @@ def test_stream_sink_runs_stateful_plan_once_within_job_budget(spark, tmp_path, 
     latest, log, src = (str(tmp_path / n) for n in ("latest", "log", "src"))
     seed = [(u, u, BASE, 1.0, "view") for u in range(1000)]
     upsert_latest(spark, windowed_features(spark.createDataFrame(seed, SCHEMA)), latest, ["user_id"])
-    assert len(_view_files(latest)) == 64
+    assert len(_view_files(latest)) == _recorded_buckets(latest) == sc.defaultParallelism
     later = BASE + dt.timedelta(minutes=10)
     _write_batch(spark, src, [(u, u, later, 2.0, "click") for u in range(300)])
 
@@ -201,6 +272,22 @@ def test_retention_delete_preserves_partition_layout(spark, tmp_path):
     assert part_dirs == ["_bucket=3", "_bucket=7"], part_dirs
     kept = sorted(r["user_id"] for r in spark.read.parquet(path).collect())
     assert kept == [1, 2]
+
+
+def test_retention_delete_keeps_bucket_record(spark, tmp_path):
+    """The TTL rewrite carries the view's bucket record across its swap,
+    so a later upsert hashes with the same count: one row per key."""
+    path = str(tmp_path / "latest")
+    now_s = 1_000_000
+    _upsert(spark, path, [(k, now_s - (100 if k % 2 else 90_000), 1.0) for k in range(20)])
+    n = _recorded_buckets(path)
+    retention_delete(spark, path, "window_start_s", horizon_s=86_400, now_s=now_s)
+    assert _recorded_buckets(path) == n
+    assert sorted(_latest_rows(spark, path)) == list(range(1, 20, 2))
+    _upsert(spark, path, [(k, now_s, 2.0) for k in range(10)])
+    want = {k: (now_s - 100, 1.0) for k in range(11, 20, 2)}
+    want.update({k: (now_s, 2.0) for k in range(10)})
+    assert _latest_rows(spark, path) == want
 
 
 def test_retention_drop_partitions(spark, tmp_path):
