@@ -166,7 +166,7 @@ def main() -> None:
           "snapshot growth ==")
     # each ingest day APPENDS a d=<n> delta dir (writes price on the
     # delta — the r12 layout); the maintenance sweep folds the logs back
-    # into one base/v=<k> and prunes old stats snapshots (keep_last=2 —
+    # into one snapshot v=<k> and prunes old stats snapshots (keep_last=2 —
     # never 1, so an in-flight retry keeps its pre-batch view)
     from streaming_feature_store_spark.operators.curation import (
         compact_ingest_state,
@@ -177,7 +177,7 @@ def main() -> None:
     res = compact_ingest_state(spark, state)
     after = sorted(os.listdir(post_root))
     print(f"  postings log before sweep: {before}")
-    print(f"  compacted to base/v={res['postings']}; stats snapshots "
+    print(f"  compacted to v={res['postings']}; stats snapshots "
           f"pruned: {res['stats_pruned']}")
     print(f"  postings root after sweep: {after}; still queryable: "
           f"{read_index_log(spark, post_root).count()} rows")

@@ -28,6 +28,8 @@ from dataclasses import dataclass, field
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from streaming_feature_store_spark import commit
+
 
 @dataclass
 class TrainConfig:
@@ -243,6 +245,19 @@ def build_pipeline(cfg: TrainConfig):
     return Pipeline(stages=[*stages, assembler, scaler, clf])
 
 
+def _transform(model, df: DataFrame) -> DataFrame:
+    """``model.transform(df)`` after dropping each stage's training summary,
+    in place. A summary holds the training frame's session, and once that
+    session has used an ``Observation`` (``watermarks.with_observation``),
+    Spark 4.1.2 cannot serialize it into a task:
+    ``NotSerializableException: ObservationManager``. Nothing here reads a
+    summary."""
+    for stage in model.stages:
+        if getattr(stage, "hasSummary", False):
+            stage._java_obj.setSummary(df.sparkSession._jvm.scala.Option.empty())
+    return model.transform(df)
+
+
 def evaluate(model, df: DataFrame, label_col: str = "label") -> dict:
     """M8: AUC, precision/recall/F1 and the confusion matrix — matrix via
     one groupBy over (prediction, label), the distributed form of the
@@ -252,7 +267,7 @@ def evaluate(model, df: DataFrame, label_col: str = "label") -> dict:
         MulticlassClassificationEvaluator,
     )
 
-    pred = model.transform(df)
+    pred = _transform(model, df)
     auc = BinaryClassificationEvaluator(labelCol=label_col, metricName="areaUnderROC").evaluate(pred)
     f1 = MulticlassClassificationEvaluator(labelCol=label_col, metricName="f1").evaluate(pred)
     cm = {
@@ -286,7 +301,7 @@ def score(model, df: DataFrame) -> DataFrame:
     """M15: batch scoring with probability + confidence columns."""
     from pyspark.ml.functions import vector_to_array
 
-    pred = model.transform(df)
+    pred = _transform(model, df)
     p1 = vector_to_array(F.col("probability")).getItem(1)
     return pred.withColumn("score", p1).withColumn(
         "confidence", F.abs(p1 - 0.5) * 2
@@ -341,31 +356,27 @@ def export_model_bundle(
     metadata dict, then models.py:353-380 registers/promotes in MLflow)
     restated Spark-native, no external services:
 
-    - ``{path}/v{N}/model/``          — the fitted PipelineModel (Spark save)
-    - ``{path}/v{N}/manifest.json``   — feature names IN SCORING ORDER,
+    - ``{path}/v=<N>/model/``         — the fitted PipelineModel (Spark save)
+    - ``{path}/v=<N>/manifest.json``  — feature names IN SCORING ORDER,
       categorical subset, algorithm, label column, metrics — everything a
       serving job needs to validate its input frame against the bundle
     - ``{path}/LATEST``               — registry "production" pointer;
       ``promote=False`` writes the version without moving the pointer (the
       staging-area half of the reference's stage promotion)
 
-    Versions auto-increment; returns the new version tag. ONNX and the
-    MLflow transport itself stay explicit non-goals (SURVEY §7) — this is
-    the capability (versioned, self-describing, promotable artifacts), not
-    the wire format."""
+    Version ``N`` (tag ``vN``) is the next after the newest committed one
+    and is committed by the ``commit`` module's rule once its model and
+    manifest are on disk; ``LATEST`` moves only after that, by tmp +
+    rename. A crash anywhere leaves ``LATEST`` on the previous bundle, and
+    a rerun after a crash before the commit rewrites the same version.
+    Returns the new version tag. ONNX and the MLflow transport itself stay
+    explicit non-goals (SURVEY §7) — this is the capability (versioned,
+    self-describing, promotable artifacts), not the wire format."""
     import json
-    import re as _re
 
-    existing = []
-    if os.path.isdir(path):
-        existing = [
-            int(m.group(1))
-            for d in os.listdir(path)
-            if (m := _re.fullmatch(r"v(\d+)", d))
-        ]
-    version = f"v{max(existing, default=0) + 1}"
-    vdir = os.path.join(path, version)
-    model.write().overwrite().save(os.path.join(vdir, "model"))
+    n = (commit.newest(path) or 0) + 1
+    version = f"v{n}"
+    vdir = os.path.join(path, f"v={n}")
     numeric = [c for c in cfg.feature_cols if c not in cfg.categorical_cols]
     manifest = {
         "version": version,
@@ -377,24 +388,33 @@ def export_model_bundle(
         "categorical_cols": list(cfg.categorical_cols),
         "metrics": metrics or {},
     }
-    with open(os.path.join(vdir, "manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=2, sort_keys=True)
+    commit.commit_version(
+        vdir,
+        lambda: save_model(model, os.path.join(vdir, "model")),
+        lambda: commit.write_text(
+            os.path.join(vdir, "manifest.json"),
+            json.dumps(manifest, indent=2, sort_keys=True),
+        ),
+    )
     if promote:
-        with open(os.path.join(path, "LATEST"), "w") as f:
-            f.write(version)
+        commit.write_text(os.path.join(path, "LATEST"), version)
     return version
 
 
 def load_model_bundle(spark, path: str, version: str | None = None):
     """Load a bundle written by ``export_model_bundle``: the promoted
     (``LATEST``) version by default, or an explicit pin. Returns
-    (PipelineModel, manifest dict)."""
+    (PipelineModel, manifest dict). Raises for a version that is not
+    committed."""
     import json
 
     if version is None:
         with open(os.path.join(path, "LATEST")) as f:
             version = f.read().strip()
-    vdir = os.path.join(path, version)
+    n = int(version.removeprefix("v"))
+    if commit.newest(path, n) != n:
+        raise FileNotFoundError(f"{path}: model bundle {version} is not committed")
+    vdir = os.path.join(path, f"v={n}")
     with open(os.path.join(vdir, "manifest.json")) as f:
         manifest = json.load(f)
     return load_model(spark, os.path.join(vdir, "model")), manifest

@@ -29,6 +29,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 from pyspark.sql.functions import broadcast
 
+from streaming_feature_store_spark import commit
 from streaming_feature_store_spark.operators.dedup import (
     dedup_exact,
     dedup_survivors,
@@ -1007,6 +1008,18 @@ def neyman_allocation(
     return weighted.drop("_wt").join(alloc, on=stratum_col, how="inner")
 
 
+def _ingest_state(state_root: str) -> tuple[dict[str, str], int]:
+    """The four index roots of a :func:`daily_ingest` state and its one
+    consistent version: the min over the roots' newest committed
+    versions, so a day that committed some roots but not others is read,
+    and rewritten whole, as the day before it everywhere."""
+    roots = {
+        k: f"{state_root}/{k}"
+        for k in ("fingerprint", "minhash", "stats", "postings")
+    }
+    return roots, min(commit.newest(r) or 0 for r in roots.values())
+
+
 def daily_ingest(
     delta: DataFrame,
     state_root: str,
@@ -1026,10 +1039,10 @@ def daily_ingest(
     (text.py corpus_stats_index_merge: a duplicate document folded into
     the counts is silently wrong forever).
 
-    State under ``state_root`` (committed versions only — the _SUCCESS
-    gate throughout).  The doc-keyed relations are DELTA LOGS
+    State under ``state_root``, versioned and read by the ``commit``
+    module's rule.  The doc-keyed relations are DELTA LOGS
     (streaming/dedup.py ``read_index_log``: per-day ``d=<n>`` dirs plus
-    an optional compacted ``base/v=<k>``), so each day WRITES only its
+    an optional compacted snapshot ``v=<k>``), so each day WRITES only its
     delta — VERDICT r11 #1 closed the O(corpus)-per-day snapshot
     rewrite; the vocabulary-bounded stats index stays a full ``v=<n>``
     snapshot (its merge updates existing rows, and vocabulary is ~flat
@@ -1111,8 +1124,9 @@ def daily_ingest(
     the statistics.
 
     Default (None) — the batch/daily form — is retry-safe the same way
-    (ADVICE r11): the day version is derived ONCE as ``1 + min`` of the
-    per-root committed latest, so every root is read at that consistent
+    (ADVICE r11): the day version is derived ONCE as 1 + the state's
+    consistent version (``_ingest_state``: the min of the per-root
+    committed latest), so every root is read at that consistent
     pre-call view and written at day_v.  A crash that committed SOME
     roots' day_v but not others leaves min() at the old day; the retry
     re-reads the pre-crash view everywhere (including the roots that
@@ -1138,36 +1152,16 @@ def daily_ingest(
         unigram_nll_from_index,
     )
     from streaming_feature_store_spark.streaming.dedup import (
-        _latest_snapshot,
         append_log_delta,
-        log_version,
         read_index_log,
     )
 
     spark = delta.sparkSession
-    roots = {
-        k: f"{state_root}/{k}"
-        for k in ("fingerprint", "minhash", "stats", "postings")
-    }
-    if version is not None:
-        base_v = version
-    else:
-        # ONE consistent pre-call version for every root (ADVICE r11):
-        # min over the per-root committed latest, so a crash that
-        # committed some roots' day but not others is re-read at the
-        # pre-crash view everywhere and overwritten whole
-        base_v = min(
-            log_version(roots["fingerprint"]) or 0,
-            log_version(roots["minhash"]) or 0,
-            log_version(roots["postings"]) or 0,
-            _latest_snapshot(roots["stats"], None) or 0,
-        )
+    roots, state_v = _ingest_state(state_root)
+    base_v = state_v if version is None else version
     day_v = base_v + 1
-    stats_read_v = _latest_snapshot(roots["stats"], base_v)
-    if stats_read_v is not None:
-        stats_prev = spark.read.parquet(
-            f"{roots['stats']}/v={stats_read_v}"
-        )
+    stats_prev = commit.read_newest(roots["stats"], spark.read.parquet, base_v)
+    if stats_prev is not None:
         # flag-consistency guard (ADVICE r11), checked BEFORE any work:
         # merging bigram counts into a state seeded WITHOUT them (or
         # vice versa) leaves the index partially covered and the
@@ -1182,8 +1176,6 @@ def daily_ingest(
                 "coverage; pass the flag the state was seeded with (or "
                 "rebuild the stats root)."
             )
-    else:
-        stats_prev = None
 
     # tier 1: exact recrawl screen against the RAW fingerprint log
     # (empty-schema log on day 0); the ledger absorbs the WHOLE delta —
@@ -1359,18 +1351,17 @@ def compact_ingest_state(
 ) -> dict:
     """Maintenance sweep for a :func:`daily_ingest` state root (run it
     OUTSIDE the ingest job, like any expire-snapshots call): fold each
-    doc-keyed delta log back into one ``base/v=<k>`` — the fingerprint
+    doc-keyed delta log back into one snapshot ``v=<k>`` — the fingerprint
     ledger re-aggregated to snapshot shape (per-day (dup_count, min id)
     rows compose by sum/min), signatures and postings plain rewrites —
     and prune old stats snapshots (``keep_stats`` ≥ 2 so an in-flight
     retry keeps its pre-batch view).  Readers never see a torn state:
-    the compacted base commits via _SUCCESS before the dirs it subsumes
-    are deleted, and queries answered from the compacted log are
+    the compacted snapshot commits before the dirs it subsumes are
+    deleted, and queries answered from the compacted log are
     byte-identical to the uncompacted one (pytest pins it).  Returns
     the per-root compacted version / pruned stats versions."""
     from streaming_feature_store_spark.streaming.dedup import (
         compact_index_log,
-        prune_snapshots,
     )
 
     def _fp_merge(df: DataFrame) -> DataFrame:
@@ -1394,7 +1385,7 @@ def compact_ingest_state(
         "postings": lambda: compact_index_log(
             spark, f"{state_root}/postings"
         ),
-        "stats_pruned": lambda: prune_snapshots(
+        "stats_pruned": lambda: commit.sweep(
             f"{state_root}/stats", keep_last=keep_stats
         ),
     }
@@ -1439,13 +1430,13 @@ def daily_erase(
       the ledger's memory of previously-dropped recrawls of the erased
       content goes with it, which is what an erasure audit wants.
 
-    Commit protocol: every root writes version ``day_v = 1 + min`` of
-    the per-root committed latest — the erased state lands as a
-    compacted ``base/v=<day_v>`` for the three logs and snapshot
-    ``v=<day_v>`` for stats — and only THEN are the subsumed dirs
-    (which still contain the erased rows) physically deleted, oldest
-    state included.  A crash before all four commit re-runs against the
-    consistent pre-erase view; after, the re-run is an idempotent
+    Commit protocol: every root writes version ``day_v`` = 1 + the
+    state's consistent version (``_ingest_state``) — the erased state
+    lands as snapshot ``v=<day_v>`` in all four roots — and only THEN
+    are the subsumed dirs (which still contain the erased rows)
+    physically deleted, oldest state included (``commit.sweep``).  A
+    crash before all four commit re-runs against the consistent
+    pre-erase view; after, the re-run is an idempotent
     anti-join over already-erased state.  Screen reports under
     ``reports/`` keep the erased ids by design (they are the audit
     trail of the DECISIONS); purge them under the deployment's
@@ -1457,8 +1448,6 @@ def daily_erase(
     Returns the audit report (index, rows_before, rows_after), also
     written to ``state_root/erasures/v=<day_v>``.
     """
-    import shutil
-
     from streaming_feature_store_spark.cacheutil import persist_tracked
     from streaming_feature_store_spark.operators.dedup import (
         erase_from_minhash_index,
@@ -1468,24 +1457,10 @@ def daily_erase(
         fingerprint,
         postings_index_erase,
     )
-    from streaming_feature_store_spark.streaming.dedup import (
-        _latest_snapshot,
-        _versioned_dirs,
-        log_version,
-        read_index_log,
-    )
+    from streaming_feature_store_spark.streaming.dedup import read_index_log
 
     spark = erased_docs.sparkSession
-    roots = {
-        k: f"{state_root}/{k}"
-        for k in ("fingerprint", "minhash", "stats", "postings")
-    }
-    base_v = min(
-        log_version(roots["fingerprint"]) or 0,
-        log_version(roots["minhash"]) or 0,
-        log_version(roots["postings"]) or 0,
-        _latest_snapshot(roots["stats"], None) or 0,
-    )
+    roots, base_v = _ingest_state(state_root)
     day_v = base_v + 1
     ids = persist_tracked(erased_docs.select(F.col(id_col)).distinct())
     erased = persist_tracked(erased_docs.select(id_col, text_col).distinct())
@@ -1498,15 +1473,13 @@ def daily_erase(
     # ids/erased through, so one tiny job warms all three
     fps_e.count()
 
-    def _erase_log(kind: str, purge) -> tuple[str, int, int]:
+    def _erase_root(kind: str, purge) -> tuple[str, int, int]:
         log = read_index_log(spark, roots[kind], base_v)
         if log is None:
             return (kind, 0, 0)
         out = purge(log)
-        out.write.mode("overwrite").parquet(
-            f"{roots[kind]}/base/v={day_v}"
-        )
-        written = spark.read.parquet(f"{roots[kind]}/base/v={day_v}")
+        out.write.mode("overwrite").parquet(f"{roots[kind]}/v={day_v}")
+        written = spark.read.parquet(f"{roots[kind]}/v={day_v}")
         return (kind, log.count(), written.count())
 
     def _purge_fingerprint(log: DataFrame) -> DataFrame:
@@ -1523,16 +1496,6 @@ def daily_erase(
         )
         return kept.unionByName(recomputed.select(*log.columns))
 
-    def _erase_stats() -> tuple[str, int, int]:
-        stats_v = _latest_snapshot(roots["stats"], base_v)
-        if stats_v is None:
-            return ("stats", 0, 0)
-        snap = spark.read.parquet(f"{roots['stats']}/v={stats_v}")
-        out = corpus_stats_index_erase(snap, erased, id_col, text_col)
-        out.write.mode("overwrite").parquet(f"{roots['stats']}/v={day_v}")
-        written = spark.read.parquet(f"{roots['stats']}/v={day_v}")
-        return ("stats", snap.count(), written.count())
-
     # phase 1: commit every root's erased state at day_v (order-free —
     # the consistent min-version read makes any crash point re-runnable).
     # r12 opt (guide §2.6): the four roots are independent writes over
@@ -1542,32 +1505,25 @@ def daily_erase(
     from streaming_feature_store_spark.poolutil import run_concurrent
 
     tasks = (
-        lambda: _erase_log(
+        lambda: _erase_root(
             "minhash", lambda log: erase_from_minhash_index(log, ids, id_col)
         ),
-        lambda: _erase_log(
+        lambda: _erase_root(
             "postings", lambda log: postings_index_erase(log, ids, id_col)
         ),
-        lambda: _erase_log("fingerprint", _purge_fingerprint),
-        _erase_stats,
+        lambda: _erase_root("fingerprint", _purge_fingerprint),
+        lambda: _erase_root(
+            "stats",
+            lambda snap: corpus_stats_index_erase(snap, erased, id_col, text_col),
+        ),
     )
     report_rows = run_concurrent(tasks)
 
     # phase 2: physically remove every dir that still holds erased rows
     # — subsumed log dirs AND pre-erase stats snapshots (retention would
     # otherwise keep serving the erased counts)
-    for kind in ("fingerprint", "minhash", "postings"):
-        for n, _ok in _versioned_dirs(roots[kind], "d").items():
-            if n <= day_v:
-                shutil.rmtree(f"{roots[kind]}/d={n}", ignore_errors=True)
-        for k, _ok in _versioned_dirs(f"{roots[kind]}/base", "v").items():
-            if k < day_v:
-                shutil.rmtree(
-                    f"{roots[kind]}/base/v={k}", ignore_errors=True
-                )
-    for v, _ok in _versioned_dirs(roots["stats"]).items():
-        if v < day_v:
-            shutil.rmtree(f"{roots['stats']}/v={v}", ignore_errors=True)
+    for r in roots.values():
+        commit.sweep(r, keep_last=1)
 
     report = spark.createDataFrame(
         report_rows, "index string, rows_before long, rows_after long"

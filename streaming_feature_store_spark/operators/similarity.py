@@ -22,6 +22,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql.functions import broadcast
 
+from streaming_feature_store_spark import commit
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -522,44 +524,69 @@ def save_ivf_index(
     centroids and re-assigns every corpus vector (the expensive matmul
     pass).
 
-    Layout (the M9 ``save_model`` discipline applied to ANN state):
+    Layout: one version dir ``<path>/v=<n>`` per build (the next after
+    the newest committed one), committed by the ``commit`` module's rule
+    once both of its tables are written, so a crash between them leaves
+    readers on the previous index:
 
-    - ``<path>/centroids``: one row per cell — ``(cell, vec)`` with the
+    - ``v=<n>/centroids``: one row per cell — ``(cell, vec)`` with the
       cell id EXPLICIT, so reload reconstructs the centroid matrix in
       the exact row order that defined the assignments (parquet read
       order is not a contract);
-    - ``<path>/cells``: the assigned corpus ``(nbr_id, cvec, cn)``
+    - ``v=<n>/cells``: the assigned corpus ``(nbr_id, cvec, cn)``
       written ``partitionBy("cell")`` — a probe query's broadcast join
       on ``cell`` lets dynamic partition pruning skip the
       (nlist − nprobe)/nlist of the corpus it never touches at the FILE
       level, which a recomputed in-memory assignment cannot do.
 
-    Idempotent overwrite; reload with :func:`ivf_topk_persisted`.
+    ``streaming/dedup.ivf_index_sink`` commits the same layout per
+    micro-batch.  Query with :func:`ivf_topk_persisted`; bound retention
+    with ``commit.sweep``.
     """
     if centroids is None:
         centroids = _default_ivf_centroids(corpus, nlist, id_col, vec_col)
     Cn = _centroid_matrix(centroids, vec_col)
-    spark = corpus.sparkSession
-    cent_df = spark.createDataFrame(
+    index = (Cn, _ivf_assign(corpus, Cn, id_col, vec_col))
+    _write_ivf(index, f"{path}/v={(commit.newest(path) or 0) + 1}")
+
+
+def _write_ivf(index, vdir: str) -> None:
+    """Commit ``index`` = (centroid matrix, assigned cells) as the IVF
+    version ``vdir``: centroids, then cells, then the version's marker."""
+    Cn, cells = index
+    cent = cells.sparkSession.createDataFrame(
         [(i, [float(x) for x in row]) for i, row in enumerate(Cn)],
         "cell long, vec array<double>",
     )
-    # r13 opt (guide §2.6): the two writes land disjoint paths and both
-    # depend only on the already-collected Cn — overlap them so the tiny
-    # centroids write rides the assign job's tail
-    from streaming_feature_store_spark.poolutil import run_concurrent
-
-    run_concurrent(
-        [
-            lambda: cent_df.write.mode("overwrite").parquet(
-                f"{path}/centroids"
-            ),
-            lambda: _ivf_assign(corpus, Cn, id_col, vec_col)
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(f"{path}/cells"),
-        ]
+    commit.commit_version(
+        vdir,
+        lambda: cent.write.mode("overwrite").parquet(f"{vdir}/centroids"),
+        lambda: cells.write.mode("overwrite")
+        .partitionBy("cell")
+        .parquet(f"{vdir}/cells"),
     )
+
+
+def _ivf_centroids(spark, vdir: str):
+    """The centroid matrix of the IVF version ``vdir``, row index = cell."""
+    import numpy as np
+
+    cent = spark.read.parquet(f"{vdir}/centroids").orderBy("cell").collect()
+    return np.array([r["vec"] for r in cent], dtype=np.float64)
+
+
+def _read_ivf(spark, vdir: str):
+    """The IVF version ``vdir`` as (centroid matrix, cells frame)."""
+    return _ivf_centroids(spark, vdir), spark.read.parquet(f"{vdir}/cells")
+
+
+def _ivf_dir(path: str, version: int | None = None) -> str:
+    """The newest committed IVF version dir ≤ ``version`` under ``path``;
+    raises if there is none."""
+    vdir = commit.read_newest(path, lambda d: d, version)
+    if vdir is None:
+        raise ValueError(f"no committed IVF index under {path}")
+    return vdir
 
 
 def ivf_topk_persisted(
@@ -570,19 +597,21 @@ def ivf_topk_persisted(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    version: int | None = None,
 ) -> DataFrame:
-    """ANN top-k against a persisted IVF index (:func:`save_ivf_index`):
-    identical results to :func:`ivf_topk` on the same corpus/centroids —
-    the pytest round-trip pins rank-for-rank equality — but the corpus
-    scan is the pre-assigned cell table, so per-query cost is the probed
-    cells' FILES only (broadcast-join dynamic partition pruning on the
-    ``cell`` partition column), with no assignment matmul at query time.
-    """
-    import numpy as np
+    """ANN top-k against a persisted IVF index (:func:`save_ivf_index`,
+    ``streaming/dedup.ivf_index_sink``): identical results to
+    :func:`ivf_topk` on the same corpus/centroids — the pytest round-trip
+    pins rank-for-rank equality — but the corpus scan is the pre-assigned
+    cell table, so per-query cost is the probed cells' FILES only
+    (broadcast-join dynamic partition pruning on the ``cell`` partition
+    column), with no assignment matmul at query time.
 
-    cent = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    Cn = np.array([r["vec"] for r in cent], dtype=np.float64)
-    c = spark.read.parquet(f"{path}/cells")
+    Reads the newest committed version, or the newest ≤ ``version`` — a
+    query pinned to v=N is untouched by v=N+1 landing.  Raises if no
+    version is committed.
+    """
+    Cn, c = _read_ivf(spark, _ivf_dir(path, version))
     return _ivf_probe_score(c, queries, Cn, k, nprobe, id_col, vec_col)
 
 
@@ -1129,7 +1158,8 @@ def ivf_index_merge(
     """Incrementally ingest new vectors into a persisted IVF index
     (:func:`save_ivf_index`): assign the delta to the EXISTING centroids
     (standard IVF practice — cells stay fixed between periodic offline
-    re-trains, FAISS ``add`` semantics) and APPEND to the cell table.
+    re-trains, FAISS ``add`` semantics) and APPEND to the newest
+    version's cell table.
 
     Because the cell table is ``partitionBy("cell")``, the append
     touches only the ≤ nlist partitions the delta lands in — existing
@@ -1140,54 +1170,16 @@ def ivf_index_merge(
     data distribution drifts from the centroids — re-train on schedule
     with ``train_centroids`` + :func:`save_ivf_index`.
 
-    Idempotence note: append is NOT retry-idempotent (unlike the
-    batch-id-versioned dedup snapshots) — when driving from foreachBatch
-    use ``streaming/dedup.ivf_index_sink``, which wraps the same
-    assign-to-fixed-centroids merge in the versioned-snapshot
-    discipline (query those snapshots with :func:`ivf_topk_snapshot`).
+    Idempotence note: the append lands inside a committed version, so it
+    is neither atomic nor retry-idempotent — when driving from
+    foreachBatch use ``streaming/dedup.ivf_index_sink``, which commits
+    the same assign-to-fixed-centroids merge as a new version per batch.
     """
-    import numpy as np
-
-    cent = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
-    Cn = np.array([r["vec"] for r in cent], dtype=np.float64)
+    vdir = _ivf_dir(path)
+    Cn = _ivf_centroids(spark, vdir)
     _ivf_assign(new_vecs, Cn, id_col, vec_col).write.mode(
         "append"
-    ).partitionBy("cell").parquet(f"{path}/cells")
-
-
-def ivf_topk_snapshot(
-    spark,
-    index_root: str,
-    queries: DataFrame,
-    k: int = 3,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    version: int | None = None,
-) -> DataFrame:
-    """ANN top-k against a batch-id-versioned IVF snapshot maintained by
-    ``streaming/dedup.ivf_index_sink``: resolves the newest committed
-    cell-table snapshot (or an explicit ``version`` — readers get
-    isolation for free, a query pinned to v=N is untouched by v=N+1
-    landing) and probes it exactly like :func:`ivf_topk_persisted`.
-    Raises if no snapshot has been committed yet."""
-    import numpy as np
-
-    from streaming_feature_store_spark.streaming.dedup import (
-        _latest_snapshot,
-    )
-
-    cells_root = f"{index_root}/cells"
-    if version is None:
-        version = _latest_snapshot(cells_root, None)
-    if version is None:
-        raise ValueError(
-            f"ivf_topk_snapshot: no committed snapshot under {cells_root}"
-        )
-    cent = spark.read.parquet(f"{index_root}/centroids").orderBy("cell").collect()
-    Cn = np.array([r["vec"] for r in cent], dtype=np.float64)
-    c = spark.read.parquet(f"{cells_root}/v={version}")
-    return _ivf_probe_score(c, queries, Cn, k, nprobe, id_col, vec_col)
+    ).partitionBy("cell").parquet(f"{vdir}/cells")
 
 
 def erase_from_ivf_index(
@@ -1197,7 +1189,8 @@ def erase_from_ivf_index(
     id_col: str = "vec_id",
 ) -> int:
     """Right-to-be-forgotten maintenance for the persisted IVF index:
-    delete the erased vectors' rows from the cell table, rewriting ONLY
+    delete the erased vectors' rows from the newest version's cell
+    table, rewriting ONLY
     the cell partitions that contain them (dynamic partition overwrite —
     untouched cells keep their files byte-identical, the same surgical
     write shape as ``streaming/sinks.upsert_latest``).  Returns the
@@ -1205,7 +1198,8 @@ def erase_from_ivf_index(
     aggregate statistics, not member data — standard DSAR treatment;
     re-train on schedule if erasure volume shifts the distribution)."""
     ids = erased_ids.select(F.col(id_col).alias("nbr_id")).distinct()
-    cells = spark.read.parquet(f"{path}/cells")
+    cells_dir = f"{_ivf_dir(path)}/cells"
+    cells = spark.read.parquet(cells_dir)
     touched = [
         r["cell"]
         for r in cells.join(broadcast(ids), "nbr_id", "left_semi")
@@ -1220,5 +1214,5 @@ def erase_from_ivf_index(
         .join(broadcast(ids), "nbr_id", "left_anti")
     )
     writer = survivors.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-    writer.partitionBy("cell").parquet(f"{path}/cells")
+    writer.partitionBy("cell").parquet(cells_dir)
     return len(touched)

@@ -199,11 +199,13 @@ def save_bpe(merges: list[tuple[str, str]], path: str) -> None:
     delta with :func:`bpe_encode` — the same amortization contract as
     ``similarity.save_ivf_index`` / ``dedup.build_minhash_index``).
     Plain ordered JSON: rank IS list position, exactly what
-    :func:`bpe_encode` reconstructs."""
+    :func:`bpe_encode` reconstructs. Written whole or not at all
+    (``commit.write_text``)."""
     import json
 
-    with open(path, "w") as f:
-        json.dump([[a, b] for a, b in merges], f)
+    from streaming_feature_store_spark import commit
+
+    commit.write_text(path, json.dumps([[a, b] for a, b in merges]))
 
 
 def load_bpe(path: str) -> list[tuple[str, str]]:

@@ -23,6 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.functions import broadcast
 
+from streaming_feature_store_spark import commit
 from streaming_feature_store_spark.functions.exprs import dsum
 from streaming_feature_store_spark.operators.asof import asof_join
 from streaming_feature_store_spark.operators.sessions import funnel_features
@@ -11774,13 +11775,8 @@ def q244_daily_ingest_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         # localize day 1's report (the newest committed reports/v= dir)
         # through a filesystem move instead of a driver collect — the
         # scale-correct lineage cut (r13; _adopt_parquet_dir docstring)
-        day1_v = max(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(f"{root}/reports")
-            if d.startswith("v=")
-        )
-        return _adopt_parquet_dir(
-            spark, f"{root}/reports/v={day1_v}"
+        return commit.read_newest(
+            f"{root}/reports", lambda d: _adopt_parquet_dir(spark, d)
         ).select(
             "doc_id",
             "is_exact_dup",
@@ -11842,10 +11838,6 @@ def q245_daily_erase_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         daily_erase,
         daily_ingest,
     )
-    from streaming_feature_store_spark.streaming.dedup import (
-        _latest_snapshot,
-    )
-
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     root = os.path.join(
         tempfile.gettempdir(), f"sfs_q245_{uuid.uuid4().hex}"
@@ -11855,11 +11847,10 @@ def q245_daily_erase_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         erased = docs.filter(F.col("doc_id") % 13 == 0)
         retained = docs.filter(F.col("doc_id") % 13 != 0)
         daily_erase(erased, root, corpus=retained)
-        v = _latest_snapshot(f"{root}/stats", None)
         # filesystem-move localization (r13; _adopt_parquet_dir docstring)
-        return _adopt_parquet_dir(spark, f"{root}/stats/v={v}").select(
-            "kind", "term", "n"
-        )
+        return commit.read_newest(
+            f"{root}/stats", lambda d: _adopt_parquet_dir(spark, d)
+        ).select("kind", "term", "n")
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -11917,7 +11908,7 @@ def q246_compacted_ingest_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two ingest days through the r12 DELTA-LOG state, compacted, then
     BM25 answered straight off the compacted log — pinning the full
     write path (per-day d=<n> appends), ``compact_ingest_state`` (the
-    logs folded into one base/v=<k>, stats snapshots pruned), and the
+    logs folded into one snapshot v=<k>, stats snapshots pruned), and the
     from-log read (``read_index_log``) against a from-scratch oracle.
     Day 1 seeds from the documents table; day 2 ingests a suffixed copy
     (doc_id+500000, text || ' zuniqz') in seeding mode too — the day-2
@@ -11939,10 +11930,7 @@ def q246_compacted_ingest_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     from streaming_feature_store_spark.operators.text import (
         bm25_from_index,
     )
-    from streaming_feature_store_spark.streaming.dedup import (
-        _latest_snapshot,
-        read_index_log,
-    )
+    from streaming_feature_store_spark.streaming.dedup import read_index_log
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     day2 = docs.select(
@@ -11957,8 +11945,7 @@ def q246_compacted_ingest_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         daily_ingest(day2, root, bigrams=False, screen_near_dups=False)
         compact_ingest_state(spark, root)
         postings = read_index_log(spark, f"{root}/postings")
-        v = _latest_snapshot(f"{root}/stats", None)
-        stats = spark.read.parquet(f"{root}/stats/v={v}")
+        stats = commit.read_newest(f"{root}/stats", spark.read.parquet)
         qdf = spark.createDataFrame(
             [
                 ("q1", "hash join strategy"),

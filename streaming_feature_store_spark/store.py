@@ -33,8 +33,9 @@ left per request is materialising the caller's keys frame; a keys frame
 built from Arrow or pandas is itself local, and then the lookup runs
 none. Not done here: bucket pruning (it needs a driver-side port of
 Spark's ``xxhash64``), and isolation from a concurrent ``upsert_latest``
-— the view has no commit point, so a read that overlaps an upsert is no
-safer than a Spark scan of the same directory.
+— the view is not yet versioned under the ``commit`` module's rule, so a
+read that overlaps an upsert is no safer than a Spark scan of the same
+directory.
 """
 
 from __future__ import annotations

@@ -16,7 +16,11 @@ stream lifetime.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
+
+from streaming_feature_store_spark import commit
 
 
 def dedup_events(
@@ -35,75 +39,21 @@ def dedup_events(
     )
 
 
-def _versioned_dirs(
-    index_root: str, prefix: str = "v"
-) -> dict[int, bool]:
-    """List ``<prefix>=<n>`` directories under ``index_root`` →
-    ``{version: committed}`` where committed means the directory carries
-    parquet's ``_SUCCESS`` job marker.  Local-FS listing here; on a
-    cluster this is one catalog/manifest lookup."""
-    import os
-    import re
-
-    out: dict[int, bool] = {}
-    if os.path.isdir(index_root):
-        for d in os.listdir(index_root):
-            m = re.fullmatch(rf"{prefix}=(\d+)", d)
-            if m:
-                out[int(m.group(1))] = os.path.exists(
-                    os.path.join(index_root, d, "_SUCCESS")
-                )
-    return out
+def _parquet(spark, vdir: str) -> DataFrame:
+    return spark.read.parquet(vdir)
 
 
-def _latest_snapshot(index_root: str, batch_id: int | None) -> int | None:
-    """Newest COMMITTED snapshot version ≤ batch_id.  NOT the global max:
-    a crashed attempt of THIS batch may already have written v=<id+1>,
-    and its retry must re-merge against the pre-batch snapshot (the
-    retry-idempotence contract the index sinks rely on).  ``batch_id
-    = None`` means the newest version outright (the READER form — a
-    query wants the latest committed snapshot).
-
-    Committed means the directory carries parquet's ``_SUCCESS`` job
-    marker (ADVICE r10): the sinks write snapshots directly to their
-    final path, so a crash MID-write leaves a partial ``v=`` directory —
-    without the marker gate a reader (or the NEXT batch's writer, whose
-    ``<= batch_id`` filter only excludes its own retries) would treat
-    the torn snapshot as newest and read a partial index.  ``_SUCCESS``
-    appears only at job commit, so gating on it is exactly the
-    visibility rule a table format's manifest provides.
-
-    Committer-config dependency (ADVICE r11): snapshots written by a
-    session with ``mapreduce.fileoutputcommitter.marksuccessfuljobs=
-    false``, or staged by external tooling without the marker, are
-    invisible to this gate.  When ``v=`` directories exist in scope but
-    NONE is committed, that is indistinguishable from a wiped state
-    root — a daily job would silently reseed as day 0 — so this warns
-    loudly instead of returning None in silence (it still returns None:
-    a day-0 crashed attempt legitimately leaves exactly one torn dir
-    and its retry must proceed as day 0)."""
-    import warnings
-
-    dirs = _versioned_dirs(index_root)
-    in_scope = {
-        v: ok
-        for v, ok in dirs.items()
-        if batch_id is None or v <= batch_id
-    }
-    versions = [v for v, ok in in_scope.items() if ok]
-    if in_scope and not versions:
-        warnings.warn(
-            f"{index_root}: {len(in_scope)} v= snapshot dir(s) exist but "
-            "none carries a _SUCCESS marker — treating as empty (day 0). "
-            "If these snapshots were written without the marker "
-            "(marksuccessfuljobs=false or external tooling), readers and "
-            "writers cannot see them; re-commit with the marker.",
-            stacklevel=2,
-        )
-    return max(versions) if versions else None
+def _write_parquet(index: DataFrame, vdir: str) -> None:
+    index.write.mode("overwrite").parquet(vdir)
 
 
-def _snapshot_sink(root: str, step, side_root: str | None = None):
+def _snapshot_sink(
+    root: str,
+    step,
+    side_root: str | None = None,
+    read=_parquet,
+    write=_write_parquet,
+):
     """The ``foreachBatch`` handler every batch-id-versioned index sink
     shares.  ``step(batch_df, prev)`` folds the micro-batch into ``prev``,
     the newest committed snapshot with version ≤ batch_id (None on day
@@ -111,36 +61,33 @@ def _snapshot_sink(root: str, step, side_root: str | None = None):
     ``side_root`` is given.  The side output lands as
     ``side_root/batch=<batch_id>``, then the index as
     ``root/v=<batch_id+1>``, so a committed snapshot means the whole batch
-    is written.  An empty batch writes nothing.
+    is written.  An empty batch writes nothing.  ``read(spark, vdir)`` and
+    ``write(index, vdir)`` load and commit one snapshot (a parquet dir
+    unless the index is several tables, as the IVF index is).
 
-    Exactly-once under foreachBatch retries without transactions:
-
-    - ``_latest_snapshot`` filters to versions ≤ batch_id, so a retried
-      batch re-reads the PRE-batch snapshot even if its crashed attempt
-      already wrote ``v=<id+1>``;
-    - both writes are ``mode=overwrite`` into batch-derived paths, so a
-      retry overwrites its own partial output instead of duplicating.
+    Exactly-once under foreachBatch retries without transactions, by the
+    ``commit`` module's rule: the read takes the newest committed version
+    ≤ batch_id, so a retried batch re-reads the PRE-batch snapshot even if
+    its crashed attempt already wrote ``v=<id+1>``, and both writes
+    overwrite batch-derived paths, so a retry replaces its own partial
+    output instead of duplicating it.
 
     Snapshot-versioned indexes also give readers isolation (a concurrent
     job keeps reading v=N while v=N+1 lands) at the cost of retaining old
-    versions — bound them with :func:`prune_snapshots`."""
+    versions — bound them with ``commit.sweep``."""
 
     def _handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        v = _latest_snapshot(root, batch_id)
-        prev = (
-            None
-            if v is None
-            else batch_df.sparkSession.read.parquet(f"{root}/v={v}")
-        )
+        spark = batch_df.sparkSession
+        prev = commit.read_newest(root, lambda d: read(spark, d), batch_id)
         updated = step(batch_df, prev)
         if side_root is not None:
             updated, side = updated
             side.write.mode("overwrite").parquet(
                 f"{side_root}/batch={batch_id}"
             )
-        updated.write.mode("overwrite").parquet(f"{root}/v={batch_id + 1}")
+        write(updated, f"{root}/v={batch_id + 1}")
 
     return _handle
 
@@ -235,100 +182,43 @@ def ivf_index_sink(
 ):
     """``foreachBatch`` twin of ``similarity.ivf_index_merge``, closing
     its documented non-idempotent-append hole (the raw merge APPENDS to
-    the cell table, so a retried batch would double its vectors): cell
-    tables are batch-id-versioned snapshots ``index_root/cells/v=<id+1>``
-    under the :func:`_snapshot_sink` retry rule — a retried batch
-    re-reads the PRE-batch snapshot (never a crashed attempt's v=<id+1>)
-    and overwrites its own batch-derived output, so the path is
-    effectively-once without transactions.  It keeps its own handler
-    because its snapshot is written ``partitionBy("cell")``.
+    the cell table, so a retried batch would double its vectors): each
+    batch commits the next version ``index_root/v=<id+1>`` of the
+    ``save_ivf_index`` layout under the :func:`_snapshot_sink` retry rule,
+    so the path is effectively-once without transactions.
 
     The FIRST non-empty batch trains the centroids
     (``_default_ivf_centroids``, deterministic for a given batch — a
-    retry re-trains identically) and seeds snapshot v=1; later batches
-    assign their vectors to the FIXED centroids (FAISS ``add``
-    semantics) and write ``previous snapshot ∪ assigned delta`` as the
-    next snapshot.  Query the latest committed snapshot with
-    ``similarity.ivf_topk_snapshot``; bound retention with
-    :func:`prune_snapshots` on ``index_root/cells``.
+    retry re-trains identically) and seeds v=1; later batches assign
+    their vectors to the FIXED centroids (FAISS ``add`` semantics) and
+    commit ``previous cells ∪ assigned delta`` with the same centroids.
+    Query with ``similarity.ivf_topk_persisted``; bound retention with
+    ``commit.sweep`` on ``index_root``.
 
     Post-drain contract (tests/test_streaming.py): top-k answered from
-    the newest snapshot ≡ a one-shot ``save_ivf_index`` build over all
+    the newest version ≡ a one-shot ``save_ivf_index`` build over all
     vectors WITH THE SAME CENTROIDS."""
     from streaming_feature_store_spark.operators.similarity import (
         _centroid_matrix,
         _default_ivf_centroids,
         _ivf_assign,
+        _read_ivf,
+        _write_ivf,
     )
 
-    def _handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        cells_root = f"{index_root}/cells"
-        v = _latest_snapshot(cells_root, batch_id)
-        if v is None:
-            centroids = _default_ivf_centroids(
-                batch_df, nlist, id_col, vec_col
+    def step(batch_df: DataFrame, prev):
+        if prev is None:
+            Cn = _centroid_matrix(
+                _default_ivf_centroids(batch_df, nlist, id_col, vec_col),
+                vec_col,
             )
-            Cn = _centroid_matrix(centroids, vec_col)
-            spark.createDataFrame(
-                [(i, [float(x) for x in row]) for i, row in enumerate(Cn)],
-                "cell long, vec array<double>",
-            ).write.mode("overwrite").parquet(f"{index_root}/centroids")
-            updated = _ivf_assign(batch_df, Cn, id_col, vec_col)
-        else:
-            import numpy as np
-
-            cent = (
-                spark.read.parquet(f"{index_root}/centroids")
-                .orderBy("cell")
-                .collect()
-            )
-            Cn = np.array([r["vec"] for r in cent], dtype=np.float64)
-            prev = spark.read.parquet(f"{cells_root}/v={v}")
-            updated = prev.unionByName(
-                _ivf_assign(batch_df, Cn, id_col, vec_col)
-            )
-        updated.write.mode("overwrite").partitionBy("cell").parquet(
-            f"{cells_root}/v={batch_id + 1}"
+            return Cn, _ivf_assign(batch_df, Cn, id_col, vec_col)
+        Cn, cells = prev
+        return Cn, cells.unionByName(
+            _ivf_assign(batch_df, Cn, id_col, vec_col)
         )
 
-    return _handle
-
-
-def prune_snapshots(index_root: str, keep_last: int = 2) -> list[int]:
-    """Retention sweep for batch-id-versioned index snapshots: delete all
-    but the newest ``keep_last`` COMMITTED versions and return the pruned
-    version numbers.  Run it OUTSIDE the stream (a maintenance job), and
-    keep at least 2 so an in-flight retry of the current batch can still
-    read its pre-batch snapshot — pruning to 1 while batch N retries
-    would drop the version the retry needs.
-
-    Only ``_SUCCESS``-committed versions count toward ``keep_last``
-    (ADVICE r11): a torn (crashed mid-write) directory is not a snapshot
-    any reader can use, so letting it occupy a keep slot could delete
-    the last COMMITTED snapshot while two torn newer dirs survive —
-    leaving readers with no visible state.  Torn dirs OLDER than the
-    newest committed version are garbage from crashed attempts whose
-    retries have since succeeded and are swept too; torn dirs NEWER than
-    it are left alone (an in-flight writer may be mid-commit on them).
-
-    Driver-side file ops (snapshots are directories this process owns);
-    a cluster deployment maps this to the table format's
-    expire-snapshots call."""
-    import os
-    import shutil
-
-    dirs = _versioned_dirs(index_root)
-    committed = sorted(v for v, ok in dirs.items() if ok)
-    pruned = committed[:-keep_last] if keep_last > 0 else committed
-    if committed:
-        newest = committed[-1]
-        pruned += [v for v, ok in dirs.items() if not ok and v < newest]
-    for v in sorted(pruned):
-        shutil.rmtree(os.path.join(index_root, f"v={v}"))
-    return sorted(pruned)
+    return _snapshot_sink(index_root, step, read=_read_ivf, write=_write_ivf)
 
 
 # --- delta-log index layout (VERDICT r11 next-item #1) ----------------------
@@ -342,34 +232,15 @@ def prune_snapshots(index_root: str, keep_last: int = 2) -> list[int]:
 # indexes), so their persisted form is a DELTA LOG:
 #
 #   root/
-#     base/v=<k>/   optional compacted base covering days 1..k
-#     d=<n>/        day n's delta rows only
+#     d=<n>/   day n's delta rows only
+#     v=<k>/   optional compacted snapshot covering days 1..k
 #
-# both committed via the same ``_SUCCESS`` gate as snapshots.  The logical
-# index at version V = newest committed base k ≤ V, unioned with committed
-# deltas k < d ≤ V.  A day's write is |delta|-sized; reads scan the same
+# versioned and read by the ``commit`` module's rule (snapshot k ≤ V plus
+# deltas k < d ≤ V).  A day's write is |delta|-sized; reads scan the same
 # rows a snapshot would; compaction (a maintenance job, like
-# prune_snapshots) folds the log back into one base when file counts
+# ``commit.sweep``) folds the log back into one snapshot when file counts
 # grow.  This is the LSM/table-format shape (Iceberg append snapshots,
 # Delta add-files) expressed on plain parquet directories.
-
-
-def log_version(index_root: str, batch_id: int | None = None) -> int | None:
-    """Newest committed version of a delta-log root ≤ batch_id: the max
-    over committed ``d=<n>`` delta dirs and ``base/v=<k>`` compacted
-    bases.  Same reader/retry semantics as :func:`_latest_snapshot`
-    (``None`` scope = newest outright)."""
-    import os
-
-    deltas = _versioned_dirs(index_root, "d")
-    bases = _versioned_dirs(os.path.join(index_root, "base"), "v")
-    versions = [
-        v
-        for src in (deltas, bases)
-        for v, ok in src.items()
-        if ok and (batch_id is None or v <= batch_id)
-    ]
-    return max(versions) if versions else None
 
 
 def append_log_delta(df, index_root: str, version: int) -> None:
@@ -381,12 +252,14 @@ def append_log_delta(df, index_root: str, version: int) -> None:
 
 
 def read_index_log(spark, index_root: str, version: int | None = None):
-    """Assemble the logical index at ``version`` (None = newest) from a
-    delta-log root: one multi-path parquet scan over the newest committed
-    base ≤ version plus the committed deltas above it.  Returns ``None``
-    when the log holds no readable rows (day 0, or every in-scope delta
-    was empty) — callers seed an empty-schema frame, exactly as for a
-    missing snapshot.
+    """The logical index at ``version`` (None = newest) of a delta-log
+    root: one multi-path parquet scan over the newest committed snapshot
+    ≤ version plus the committed deltas above it (``commit.read_newest``).
+    Returns ``None`` when nothing is committed in scope or it holds no
+    data file — callers seed an empty-schema frame, exactly as for a
+    missing snapshot.  A committed 0-row write still leaves a
+    schema-carrying data file and reads as 0 rows; any read error
+    raises.
 
     The union is a SCAN, not a merge: doc-keyed index rows are disjoint
     across days by contract, so no aggregation is needed to read them.
@@ -395,68 +268,32 @@ def read_index_log(spark, index_root: str, version: int | None = None):
     deliberately avoids that via ``dedup.fingerprint_log_screen``, which
     aggregates per DELTA doc, never per corpus row;
     :func:`compact_index_log` takes the groupBy as its ``merge`` arg.)"""
-    import os
-
-    v = version if version is not None else log_version(index_root)
-    if v is None:
-        return None
-    bases = _versioned_dirs(os.path.join(index_root, "base"), "v")
-    base_k = max(
-        (k for k, ok in bases.items() if ok and k <= v), default=None
-    )
-    paths = []
-    if base_k is not None:
-        paths.append(f"{index_root}/base/v={base_k}")
-    lo = base_k if base_k is not None else 0
-    paths += [
-        f"{index_root}/d={n}"
-        for n, ok in sorted(_versioned_dirs(index_root, "d").items())
-        if ok and lo < n <= v
-    ]
-    if not paths:
-        return None
-    try:
-        return spark.read.parquet(*paths)
-    except Exception:
-        # every in-scope dir is empty (a committed write of a 0-row
-        # frame leaves _SUCCESS and no data files) — logically an
-        # empty index
-        return None
+    return commit.read_newest(index_root, spark.read.parquet, version)
 
 
-def compact_index_log(
-    spark, index_root: str, merge=None, delete_old: bool = True
-) -> int | None:
-    """Fold a delta log back into one base: read the logical index at the
-    newest committed version V, apply ``merge`` (e.g. the fingerprint
+def compact_index_log(spark, index_root: str, merge=None) -> int | None:
+    """Fold a delta log back into one snapshot: read the logical index at
+    the newest committed version V, apply ``merge`` (e.g. the fingerprint
     ledger's groupBy-sum/min; None = plain rewrite), commit it as
-    ``base/v=V``, then delete the version-≤V dirs it subsumes.  Returns
-    V (None if the log is empty).
+    ``v=V``, then sweep the dirs it subsumes.  Returns V (None if the log
+    is empty).
 
-    Crash-safe by the same gate as everything else: a torn ``base/v=V``
-    is invisible, and the moment it commits the reader rule (newest base
-    k, deltas > k) stops consulting the old dirs — deletion afterwards
-    is pure space reclamation.  Run it OUTSIDE the writer (a maintenance
-    job, like :func:`prune_snapshots`); dirs NEWER than V (an in-flight
-    day) are never touched."""
-    import os
-    import shutil
-
-    v = log_version(index_root)
-    if v is None:
+    Crash-safe by the ``commit`` rule: a torn ``v=V`` is invisible, and
+    the moment it commits readers stop consulting the older dirs, so the
+    sweep afterwards is pure space reclamation.  A rerun after a crash
+    between the two finds ``v=V`` already the whole index and only
+    sweeps.  Run it OUTSIDE the writer (a maintenance job); dirs NEWER
+    than V (an in-flight day) are never touched."""
+    v = commit.newest(index_root)
+    dirs = commit.read_newest(index_root, lambda *d: d)
+    if dirs is None:
         return None
-    df = read_index_log(spark, index_root, v)
-    if df is None:
-        return None
-    out = merge(df) if merge is not None else df
-    out.write.mode("overwrite").parquet(f"{index_root}/base/v={v}")
-    if delete_old:
-        for n in _versioned_dirs(index_root, "d"):
-            if n <= v:
-                shutil.rmtree(f"{index_root}/d={n}")
-        for k in _versioned_dirs(os.path.join(index_root, "base"), "v"):
-            if k < v:
-                shutil.rmtree(f"{index_root}/base/v={k}")
+    snapshot = os.path.join(index_root, f"v={v}")
+    if dirs != (snapshot,):
+        df = spark.read.parquet(*dirs)
+        out = merge(df) if merge is not None else df
+        out.write.mode("overwrite").parquet(snapshot)
+    commit.sweep(index_root, keep_last=1)
     return v
 
 

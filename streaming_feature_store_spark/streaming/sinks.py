@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.pandas.types import from_arrow_type
 from pyspark.sql.types import StructField, StructType
 
+from streaming_feature_store_spark import commit
+
 
 # A latest view's bucket count, one decimal line in its root. The name is
 # ``_``-prefixed with no ``=``, so Spark's listing, ``spark.read.parquet``
@@ -117,13 +119,9 @@ def _recorded_buckets(path: str) -> int | None:
 
 def _write_bucket_record(path: str, n_buckets: int) -> None:
     """Create the view at ``path`` with ``n_buckets`` buckets. The record
-    is written under a temp name and renamed, so it is whole or absent."""
-    fs, root = _view_fs(path)
-    fs.create_dir(root)
-    tmp = f"{root}/{BUCKETS_RECORD}.tmp"
-    with fs.open_output_stream(tmp) as f:
-        f.write(f"{n_buckets}\n".encode())
-    fs.move(tmp, f"{root}/{BUCKETS_RECORD}")
+    is written by ``commit.write_text`` (tmp + rename), so it is whole or
+    absent."""
+    commit.write_text(f"{path.rstrip('/')}/{BUCKETS_RECORD}", f"{n_buckets}\n")
 
 
 def _read_buckets(spark: SparkSession, path: str, buckets: list[int]) -> DataFrame | None:

@@ -246,6 +246,36 @@ def test_model_bundle_roundtrip(spark, tmp_path):
     assert m2["version"] == "v2"
 
 
+def test_model_bundle_after_observation(spark, tmp_path):
+    """A session that has used an ``Observation`` (``watermarks.
+    with_observation``) still exports, reloads and scores a model whose
+    training summary holds the session. Spark 4.1.2 cannot serialize that
+    session into a task (``NotSerializableException: ObservationManager``),
+    so a transform of the fitted model failed until ``score`` and
+    ``evaluate`` dropped the summary first; the export itself never
+    serialized it."""
+    from streaming_feature_store_spark.ml.training import (
+        export_model_bundle,
+        load_model_bundle,
+    )
+    from streaming_feature_store_spark.streaming.watermarks import (
+        with_observation,
+    )
+
+    df = _dataset(spark, 300)
+    observed, obs = with_observation(df, "bundle_rows", {"n": F.count(F.lit(1))})
+    cfg = TrainConfig(feature_cols=["f1", "f2"], algorithm="lr")
+    model = build_pipeline(cfg).fit(observed)
+    assert obs.get["n"] == 300
+    assert model.stages[-1].hasSummary
+    reg = str(tmp_path / "registry")
+    assert export_model_bundle(model, reg, cfg) == "v1"
+    loaded, manifest = load_model_bundle(spark, reg)
+    assert manifest["feature_names"] == ["f1", "f2"]
+    want = score(model, df).select("id", "score").collect()
+    assert score(loaded, df).select("id", "score").collect() == want
+
+
 def test_train_with_hashed_categoricals(spark):
     """encoder="hash": the FeatureHasher path must carry the categorical's
     signal without any fitted label map (stateless hashing trick), and the

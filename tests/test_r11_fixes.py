@@ -91,7 +91,7 @@ def test_validate_passes_and_preserves_results_on_merged(spark, corpora):
 
 
 def test_latest_snapshot_skips_uncommitted_versions(tmp_path):
-    from streaming_feature_store_spark.streaming.dedup import _latest_snapshot
+    from streaming_feature_store_spark.commit import newest as _latest_snapshot
 
     root = tmp_path / "idx"
     for v, committed in ((1, True), (2, True), (3, False)):
@@ -112,8 +112,8 @@ def test_latest_snapshot_skips_uncommitted_versions(tmp_path):
 def test_sinks_write_committed_snapshots(spark, tmp_path):
     # the sinks' own writes carry _SUCCESS, so the gate never hides a
     # healthy snapshot
+    from streaming_feature_store_spark.commit import newest as _latest_snapshot
     from streaming_feature_store_spark.streaming.dedup import (
-        _latest_snapshot,
         stats_index_sink,
     )
 

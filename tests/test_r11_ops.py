@@ -185,8 +185,8 @@ def test_line_freq_and_ngram_df_index_streams_match_batch(spark, tmp_path):
         line_freq_index,
         ngram_doc_freq_index,
     )
+    from streaming_feature_store_spark.commit import newest as _latest_snapshot
     from streaming_feature_store_spark.streaming.dedup import (
-        _latest_snapshot,
         line_freq_index_sink,
         ngram_df_index_sink,
     )
@@ -211,8 +211,8 @@ def test_winnow_index_stream_matches_batch(spark, tmp_path):
         build_winnow_index,
         winnow_containment_pairs,
     )
+    from streaming_feature_store_spark.commit import newest as _latest_snapshot
     from streaming_feature_store_spark.streaming.dedup import (
-        _latest_snapshot,
         winnow_index_sink,
     )
 
@@ -357,8 +357,8 @@ def test_decontam_hits_stream_matches_batch(spark, tmp_path):
         decontaminate,
         decontaminate_from_index,
     )
+    from streaming_feature_store_spark.commit import newest as _latest_snapshot
     from streaming_feature_store_spark.streaming.dedup import (
-        _latest_snapshot,
         decontam_hits_sink,
     )
 
@@ -400,7 +400,7 @@ def test_daily_ingest_two_days(spark, tmp_path):
         postings_index,
         unigram_nll,
     )
-    from streaming_feature_store_spark.streaming.dedup import _latest_snapshot
+    from streaming_feature_store_spark.commit import newest as _latest_snapshot
 
     root = str(tmp_path / "state")
     base_rows = [
@@ -447,8 +447,8 @@ def test_daily_ingest_two_days(spark, tmp_path):
     )
     # postings live in the delta-log layout (r12): per-day d=<n> dirs,
     # logically the union — still exactly the one-shot survivor build
+    from streaming_feature_store_spark.commit import newest as log_version
     from streaming_feature_store_spark.streaming.dedup import (
-        log_version,
         read_index_log,
     )
 
@@ -510,7 +510,7 @@ def test_daily_ingest_sink_stream_and_retry(spark, tmp_path):
     from streaming_feature_store_spark.operators.text import (
         corpus_stats_index,
     )
-    from streaming_feature_store_spark.streaming.dedup import _latest_snapshot
+    from streaming_feature_store_spark.commit import newest as _latest_snapshot
 
     rows_b0 = [
         (1, "the quick brown fox jumps over the lazy dog today"),

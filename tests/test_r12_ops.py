@@ -38,12 +38,10 @@ from streaming_feature_store_spark.operators.text import (
     save_postings_index,
     unigram_nll,
 )
-from streaming_feature_store_spark.streaming.dedup import (
-    _latest_snapshot,
-    log_version,
-    prune_snapshots,
-    read_index_log,
-)
+from streaming_feature_store_spark.commit import newest as _latest_snapshot
+from streaming_feature_store_spark.commit import newest as log_version
+from streaming_feature_store_spark.commit import sweep as prune_snapshots
+from streaming_feature_store_spark.streaming.dedup import read_index_log
 
 
 def _canon(df):
@@ -190,7 +188,7 @@ def test_compact_ingest_state_preserves_answers(spark, tmp_path):
     res = compact_ingest_state(spark, root)
     assert res["postings"] == 2 and res["fingerprint"] == 2
     assert not os.path.exists(f"{root}/postings/d=1")
-    assert os.path.exists(f"{root}/postings/base/v=2")
+    assert os.path.exists(f"{root}/postings/v=2")
     assert _canon(read_index_log(spark, f"{root}/postings")) == before_post
     assert _canon(read_index_log(spark, f"{root}/minhash")) == before_mh
     # the compacted ledger is snapshot-shaped (one row per fingerprint)

@@ -281,7 +281,7 @@ def test_ivf_index_save_load_roundtrip(spark, tmp_path):
     # can file-prune; sanity-check the layout exists as documented
     import os
 
-    parts = [d for d in os.listdir(f"{path}/cells") if d.startswith("cell=")]
+    parts = [d for d in os.listdir(f"{path}/v=1/cells") if d.startswith("cell=")]
     assert len(parts) == 8
     # a second save is an idempotent overwrite
     save_ivf_index(emb, path, nlist=8)
@@ -321,7 +321,7 @@ def test_ivf_index_merge_appends_delta(spark, tmp_path):
         .collect()
     )
     # fresh build over the union with the SAME centroid table
-    cents = spark.read.parquet(f"{path}/centroids").orderBy("cell").select(
+    cents = spark.read.parquet(f"{path}/v=1/centroids").orderBy("cell").select(
         F.col("cell").alias("vec_id"), F.col("vec").alias("embedding")
     )
     fresh = (
@@ -360,16 +360,16 @@ def test_erase_from_ivf_index_surgical_rewrite(spark, tmp_path):
     path = str(tmp_path / "ivfidx")
     save_ivf_index(emb, path, nlist=8)
     before = {
-        d: sorted(os.listdir(f"{path}/cells/{d}"))
-        for d in os.listdir(f"{path}/cells")
+        d: sorted(os.listdir(f"{path}/v=1/cells/{d}"))
+        for d in os.listdir(f"{path}/v=1/cells")
         if d.startswith("cell=")
     }
     erased = emb.filter(F.col("vec_id") % 9 == 0).select("vec_id")
     n_rewritten = erase_from_ivf_index(spark, path, erased)
     assert 0 < n_rewritten <= 8
     after = {
-        d: sorted(os.listdir(f"{path}/cells/{d}"))
-        for d in os.listdir(f"{path}/cells")
+        d: sorted(os.listdir(f"{path}/v=1/cells/{d}"))
+        for d in os.listdir(f"{path}/v=1/cells")
         if d.startswith("cell=")
     }
     untouched = [d for d in before if before[d] == after.get(d)]
@@ -380,7 +380,7 @@ def test_erase_from_ivf_index_surgical_rewrite(spark, tmp_path):
         .orderBy("query_id", "rank")
         .collect()
     )
-    cents = spark.read.parquet(f"{path}/centroids").orderBy("cell").select(
+    cents = spark.read.parquet(f"{path}/v=1/centroids").orderBy("cell").select(
         F.col("cell").alias("vec_id"), F.col("vec").alias("embedding")
     )
     want = (

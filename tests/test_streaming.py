@@ -915,9 +915,7 @@ def test_fingerprint_index_stream_screens_recrawls(spark, tmp_path):
 
 
 def test_prune_snapshots_keeps_newest(spark, tmp_path):
-    from streaming_feature_store_spark.streaming.dedup import (
-        prune_snapshots,
-    )
+    from streaming_feature_store_spark.commit import sweep as prune_snapshots
 
     root = str(tmp_path / "idx")
     for v in (1, 3, 5, 9):
@@ -1093,7 +1091,6 @@ def test_ivf_index_stream_matches_batch_build(spark, tmp_path):
     centroids (rank-for-rank)."""
     from streaming_feature_store_spark.operators.similarity import (
         ivf_topk_persisted,
-        ivf_topk_snapshot,
         save_ivf_index,
     )
     from streaming_feature_store_spark.streaming.dedup import ivf_index_sink
@@ -1117,20 +1114,20 @@ def test_ivf_index_stream_matches_batch_build(spark, tmp_path):
         .start()
     )
     q.awaitTermination(180)
-    assert len(os.listdir(f"{root}/cells")) >= 3  # one snapshot per batch
+    assert len(os.listdir(root)) >= 3  # one snapshot per batch
 
     queries = spark.createDataFrame(
         vecs[:5], "vec_id long, embedding array<double>"
     )
     got = {
         (r["query_id"], r["rank"]): (r["nbr_id"], r["cosine"])
-        for r in ivf_topk_snapshot(
+        for r in ivf_topk_persisted(
             spark, root, queries, k=2, nprobe=2
         ).collect()
     }
     # batch build over all vectors with the STREAM's centroids
     cent = (
-        spark.read.parquet(f"{root}/centroids")
+        spark.read.parquet(f"{root}/v=1/centroids")
         .orderBy("cell")
         .select(F.col("vec").alias("embedding"))
     )
@@ -1166,7 +1163,7 @@ def test_ivf_index_sink_retry_rereads_prebatch_snapshot(spark, tmp_path):
     handle(b0, 0)
     handle(b1, 1)          # crashed attempt: v=2 exists
     handle(b1, 1)          # retry must read v=1, not v=2
-    snap = spark.read.parquet(str(tmp_path / "idx/cells/v=2"))
+    snap = spark.read.parquet(str(tmp_path / "idx/v=2/cells"))
     ids = [r["nbr_id"] for r in snap.collect()]
     assert sorted(ids) == sorted(set(ids)) and len(ids) == 14
 
@@ -1226,7 +1223,7 @@ _SNAPSHOT_SINKS = {
     ),
     "ivf_index_sink": (
         lambda s, r, side: dedup.ivf_index_sink(r, nlist=2),
-        _vecs_batch, "/cells", False,
+        _vecs_batch, "", False,
     ),
     "stats_index_sink": (
         lambda s, r, side: dedup.stats_index_sink(r),
@@ -1279,8 +1276,8 @@ def test_stats_and_postings_index_streams_match_batch(spark, tmp_path):
         corpus_stats_index,
         postings_index,
     )
+    from streaming_feature_store_spark.commit import newest as _latest_snapshot
     from streaming_feature_store_spark.streaming.dedup import (
-        _latest_snapshot,
         postings_index_sink,
         stats_index_sink,
     )

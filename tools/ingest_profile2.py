@@ -26,7 +26,10 @@ def main() -> None:
         persist_tracked,
         release_cached_intermediates,
     )
-    from streaming_feature_store_spark.operators.curation import daily_ingest
+    from streaming_feature_store_spark.operators.curation import (
+        _ingest_state,
+        daily_ingest,
+    )
     from streaming_feature_store_spark.operators.dedup import (
         build_minhash_index,
         exact_dup_groups,
@@ -39,10 +42,9 @@ def main() -> None:
         postings_index,
         unigram_nll_from_index,
     )
+    from streaming_feature_store_spark.commit import read_newest
     from streaming_feature_store_spark.streaming.dedup import (
-        _latest_snapshot,
         append_log_delta,
-        log_version,
         read_index_log,
     )
     from streaming_feature_store_spark.session import get_spark
@@ -79,21 +81,9 @@ def main() -> None:
                 sum0[0] = time.time()
 
             sum0 = [time.time()]
-            roots = {
-                k: f"{state_root}/{k}"
-                for k in ("fingerprint", "minhash", "stats", "postings")
-            }
-            base_v = min(
-                log_version(roots["fingerprint"]) or 0,
-                log_version(roots["minhash"]) or 0,
-                log_version(roots["postings"]) or 0,
-                _latest_snapshot(roots["stats"], None) or 0,
-            )
+            roots, base_v = _ingest_state(state_root)
             day_v = base_v + 1
-            stats_read_v = _latest_snapshot(roots["stats"], base_v)
-            stats_prev = spark.read.parquet(
-                f"{roots['stats']}/v={stats_read_v}"
-            )
+            stats_prev = read_newest(roots["stats"], spark.read.parquet, base_v)
             has_bi = bool(stats_prev.filter(F.col("kind") == "bi").head(1))
             mark("versions+has_bi")
 

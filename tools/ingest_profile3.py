@@ -34,9 +34,9 @@ def main() -> None:
         fingerprint_log_screen,
         minhash_index_screen,
     )
+    from streaming_feature_store_spark.commit import newest
     from streaming_feature_store_spark.streaming.dedup import (
         append_log_delta,
-        log_version,
         read_index_log,
     )
     from streaming_feature_store_spark.session import get_spark
@@ -78,7 +78,7 @@ def main() -> None:
                 k: f"{root}/{k}"
                 for k in ("fingerprint", "minhash", "stats", "postings")
             }
-            base_v = log_version(roots["fingerprint"]) or 0
+            base_v = newest(roots["fingerprint"]) or 0
             day_v = base_v + 1
 
             spark.sparkContext.setJobDescription("tier1-fp-screen")

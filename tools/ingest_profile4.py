@@ -34,8 +34,8 @@ def main() -> None:
         fingerprint_log_screen,
         minhash_index_screen,
     )
+    from streaming_feature_store_spark.commit import newest
     from streaming_feature_store_spark.streaming.dedup import (
-        log_version,
         read_index_log,
     )
     from streaming_feature_store_spark.session import get_spark
@@ -67,7 +67,7 @@ def main() -> None:
         print(f"seed_day={time.time()-t0:.2f}s", flush=True)
 
         roots = {k: f"{root}/{k}" for k in ("fingerprint", "minhash")}
-        base_v = log_version(roots["fingerprint"]) or 0
+        base_v = newest(roots["fingerprint"]) or 0
 
         fp_log = read_index_log(spark, roots["fingerprint"], base_v)
         fp_screen = persist_tracked(
