@@ -15,6 +15,9 @@ TTL (streaming/core/sinks/redis_sink.py:96-168). Here:
   hashes with the recorded count.
 - **feature log** = append-only, date-partitioned; this is the replay/
   backfill source (DesignDoc.md:129-131) and the offline training store.
+  A stream writes it one ``_batch=`` partition per micro-batch through
+  ``write_batch``, the one write rule of every append-style log in
+  ``streaming/``.
 - **TTL** = retention delete: drop log partitions / latest rows older than
   the retention horizon (redis TTL 24 h → `retention_delete`).
 - **DLQ** = malformed records appended to a quarantine table
@@ -24,9 +27,11 @@ TTL (streaming/core/sinks/redis_sink.py:96-168). Here:
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import shutil
+from collections.abc import Callable
 
 import pyarrow.dataset as ds
 import pyarrow.fs as pafs
@@ -209,6 +214,36 @@ def _spark_schema(view: ds.Dataset) -> StructType:
     return StructType([StructField(f.name, f.dataType, True, f.metadata) for f in fields])
 
 
+def write_batch(df: DataFrame, path: str, batch_id: int, *by: str) -> None:
+    """Write micro-batch ``batch_id``'s rows to the log at ``path`` as its
+    own ``_batch=<batch_id>[/<by>=…]`` partition, by dynamic partition
+    overwrite. A retried or replayed micro-batch re-runs under the same id
+    over the same input, so its write REPLACES its partition instead of
+    double-appending: checkpoint + this write is effectively-once (T5), and
+    no reader of the log needs to know how replays happen. Every
+    append-style log in ``streaming/`` writes through here."""
+    writer = df.withColumn("_batch", F.lit(batch_id)).write.mode("overwrite")
+    writer.option("partitionOverwriteMode", "dynamic").partitionBy("_batch", *by).parquet(path)
+
+
+def _start_stream(
+    frame: DataFrame,
+    sink: Callable[[DataFrame, int], None],
+    checkpoint: str | None,
+    trigger_available_now: bool,
+):
+    """Start ``frame`` in append mode with ``sink`` as its foreachBatch
+    function; returns the StreamingQuery. ``checkpoint`` makes the query
+    restartable; ``trigger_available_now`` drains the available input, then
+    stops."""
+    writer = frame.writeStream.outputMode("append").foreachBatch(sink)
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def append_log(
     batch_df: DataFrame,
     path: str,
@@ -219,19 +254,16 @@ def append_log(
     Partitioning by date keeps retention deletes and time-range training
     reads to partition-pruned scans at 100 TB.
 
-    When ``batch_id`` is provided (the foreachBatch path), the write targets
-    a ``_batch=`` partition with dynamic overwrite — re-running a failed
-    micro-batch REPLACES its partition instead of double-appending, which is
-    what makes checkpoint + this sink effectively-once (T5). Plain appends
-    (batch materialization) skip the batch column."""
+    When ``batch_id`` is provided (the foreachBatch path), the rows go
+    through ``write_batch`` under ``_batch=<batch_id>/_date=…``. Plain
+    appends (batch materialization) skip the batch column."""
     d = batch_df.withColumn(
         "_date", F.to_date(F.timestamp_seconds(F.col(ts_col)))
     )
     if batch_id is None:
         d.write.mode("append").partitionBy("_date").parquet(path)
         return
-    writer = d.withColumn("_batch", F.lit(batch_id)).write.mode("overwrite")
-    writer.option("partitionOverwriteMode", "dynamic").partitionBy("_batch", "_date").parquet(path)
+    write_batch(d, path, batch_id, "_date")
 
 
 def _partition_cols(path: str) -> list[str]:
@@ -288,10 +320,9 @@ def retention_drop_partitions(
     directories strictly older than the horizon — the parquet analog of a
     Delta ``DELETE WHERE _date < …`` partition drop. Rows inside the cutoff
     day are kept (conservative: a partition is only dropped when its entire
-    day is expired). Returns the dropped partition names."""
-    import datetime
-
-    cutoff = datetime.date.fromtimestamp(now_s - horizon_s)
+    day is expired). Days are UTC days, as ``append_log`` derives ``_date``
+    in the session's UTC zone. Returns the dropped partition names."""
+    cutoff = datetime.datetime.fromtimestamp(now_s - horizon_s, datetime.timezone.utc).date()
     dropped = []
     for root, dirs, _files in os.walk(path):
         for d in list(dirs):
@@ -314,11 +345,11 @@ def route_dlq(
 
     BATCH frames only: the eager DLQ write is illegal on a streaming frame —
     call this inside ``foreachBatch`` on the micro-batch (the S5 Kafka
-    decode path does exactly that). The input is cached for the duration of
-    the split so the corrupt-row write and the clean-row return don't each
-    re-scan/re-parse the source; the cache is dropped once the clean side
-    is materialized by the caller's sink write (unpersist is safe — it only
-    marks the plan re-computable)."""
+    decode path does exactly that). Nothing is cached here: the DLQ write
+    and the caller's consumption of the clean side each evaluate
+    ``parsed``. A caller that wants one parse persists ``parsed`` itself
+    and unpersists it after its sink write, so no cached plan outlives
+    the micro-batch."""
     if parsed.isStreaming:
         raise ValueError(
             "route_dlq needs a batch DataFrame; call it inside foreachBatch"
@@ -326,7 +357,6 @@ def route_dlq(
     if corrupt_col not in parsed.columns:
         return parsed
     if dlq_path is not None:
-        parsed.persist()
         parsed.filter(F.col(corrupt_col).isNotNull()).write.mode("append").parquet(
             dlq_path
         )

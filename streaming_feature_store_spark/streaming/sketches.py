@@ -1,27 +1,23 @@
-"""Streaming mergeable-sketch rollup — the streaming half of q108.
+"""Streaming mergeable-summary rollups — the streaming half of q108.
 
 The whole point of the Datasketches family (q108-q111) is MERGEABILITY:
 partial sketches built on disjoint slices union into the exact same
 sketch state as one pass over all rows. In streaming that property is the
 freshness path the reference serves from Redis (streaming/core/sinks/
 redis_sink.py:131-151 keeps per-entity aggregates fresh per batch): each
-micro-batch reduces to per-day HLL sketch PARTIALS (bytes, not rows) and
-appends them to a daily partial log; any read horizon (day / week /
-month) is then a cheap ``hll_union_agg`` over the partials — never a
-re-scan of raw events.
+micro-batch reduces to small PARTIALS (per-day sketches, decimal moments,
+counts, bucket counts, top-k candidates — bytes, not rows) in a partial
+log; any read horizon (day / week / month) is then a cheap merge over the
+partials — never a re-scan of raw events.
 
-Why append-only partials rather than read-modify-write of a merged daily
-table:
-
-- an HLL sketch is a SET summary, so union is IDEMPOTENT over re-inserted
-  values — a replayed/retried micro-batch appends a duplicate partial and
-  the merged estimate is unchanged. Effectively-once for free, with no
-  dynamic-partition-overwrite machinery in the hot path;
-- appends are safe against concurrent readers (no in-place overwrite of
-  a parquet table a reader may be scanning);
-- the log stays tiny: one row per (day, batch) at ~lgK·bytes each; a
-  periodic ``compact_partials`` (same union expression, overwrite into a
-  fresh generation) bounds it if batches are very frequent.
+Every stream here is one partial log with one write rule: a micro-batch's
+partials are its own ``_batch=<id>`` partition, written by
+``sinks.write_batch``. A retried or replayed micro-batch (a restart from
+the checkpoint re-runs batch ``n`` under the same id over the same input)
+replaces that partition, so the log holds each batch exactly once and
+every reader merges all the rows it sees, whatever the summary. A
+periodic ``compact_partials`` folds an HLL log into one ``_batch=-1``
+partition of a fresh generation, which the same readers read.
 
 At 100 TB scale the per-batch reduction is a map-side partial aggregate
 over the batch only; shuffle volume is days × sketch bytes per batch.
@@ -29,8 +25,36 @@ over the batch only; shuffle volume is days × sketch bytes per batch.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+from streaming_feature_store_spark.operators.curation import weighted_priority_sample
+from streaming_feature_store_spark.operators.drift import histogram_index
+from streaming_feature_store_spark.operators.incremental import (
+    merge_partials,
+    partial_aggregate,
+)
+from streaming_feature_store_spark.streaming.sinks import _start_stream, write_batch
+
+
+def _partials_stream(
+    events: DataFrame,
+    out_path: str,
+    reduce: Callable[[DataFrame], DataFrame],
+    checkpoint: str | None,
+    trigger_available_now: bool,
+):
+    """Start a partial log at ``out_path``: each non-empty micro-batch
+    writes ``reduce(batch_df)`` through ``write_batch``. Returns the
+    StreamingQuery."""
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            write_batch(reduce(batch_df), out_path, batch_id)
+
+    return _start_stream(events, sink, checkpoint, trigger_available_now)
 
 
 def hll_partials_stream(
@@ -42,33 +66,17 @@ def hll_partials_stream(
     checkpoint: str | None = None,
     trigger_available_now: bool = True,
 ):
-    """Start the sketch-partial pipeline; returns the StreamingQuery.
-
-    Each micro-batch appends (day, sk: binary, batch_id) rows — one HLL
-    sketch per day touched by the batch. No watermark is needed: a late
+    """Start the HLL partial log: ``sketch_partials_stream`` with
+    ``hll_sketch_agg(key_col)``, one (day, sk) sketch per day the batch
+    touches; returns the StreamingQuery. No watermark is needed: a late
     event simply contributes another partial to its (old) day, and the
     read-side union folds it in — sketches make late data a non-event
     instead of a dropped row.
     """
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            batch_df.select(F.to_date(ts_col).alias("day"), F.col(key_col))
-            .groupBy("day")
-            .agg(F.expr(f"hll_sketch_agg({key_col})").alias("sk"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out_path)
-        )
-
-    writer = events.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return sketch_partials_stream(
+        spark, events, out_path, f"hll_sketch_agg({key_col})", ts_col,
+        checkpoint, trigger_available_now,
+    )
 
 
 def hll_estimate(
@@ -108,77 +116,43 @@ def algebraic_partials_stream(
     """Streaming twin of ``operators/incremental.partial_aggregate`` —
     the T11 replay contract for ALGEBRAIC states, not just sketches:
     each micro-batch collapses to exact decimal (n, Σx, Σx², min, max)
-    state rows per (group, day) tagged with the micro-batch id, appended
-    to a partial log; :func:`merged_algebraic_view` answers group-level
-    questions by merging states, never rescanning events.
-
-    Effectively-once differs from the HLL log by necessity: sketch union
-    is idempotent under re-appended partials, but algebraic SUMs are not
-    — so the provenance key (group, day, batch_id) rides along and the
-    read side deduplicates on it.  A replayed micro-batch (restart from
-    checkpoint re-delivers the same batch_id over the same input)
-    re-appends byte-identical state rows, which the dedup collapses —
-    the same exact-row-parity-across-restart guarantee the q-sink soak
-    probe pins, restated for the incremental-merge family.
+    state rows per (group, day) in the partial log;
+    :func:`merged_algebraic_view` answers group-level questions by
+    merging states, never rescanning events.
     """
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from streaming_feature_store_spark.operators.incremental import (
-            partial_aggregate,
-        )
-
-        (
-            partial_aggregate(
-                batch_df, [group_col], F.to_date(ts_col), value_col
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out_path)
-        )
-
-    writer = events.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _partials_stream(
+        events,
+        out_path,
+        lambda b: partial_aggregate(b, [group_col], F.to_date(ts_col), value_col),
+        checkpoint,
+        trigger_available_now,
+    )
 
 
 def merged_algebraic_view(
     spark: SparkSession, partials_path: str, group_cols: list[str]
 ) -> DataFrame:
-    """Group totals from the algebraic partial log: drop replayed state
-    rows by provenance key, then ``merge_partials`` — bit-identical to a
-    direct aggregation over all raw rows (decimal moments are order- and
-    shard-independent)."""
-    from streaming_feature_store_spark.operators.incremental import (
-        merge_partials,
-    )
-
-    parts = spark.read.parquet(partials_path).dropDuplicates(
-        group_cols + ["shard", "batch_id"]
-    )
-    return merge_partials(parts, group_cols)
+    """Group totals from the algebraic partial log by ``merge_partials`` —
+    bit-identical to a direct aggregation over all raw rows (decimal
+    moments are order- and shard-independent)."""
+    return merge_partials(spark.read.parquet(partials_path), group_cols)
 
 
 def compact_partials(spark: SparkSession, partials_path: str, out_path: str) -> None:
-    """Fold the partial log down to one sketch per day (same union
-    expression the estimates use), written to a fresh generation — run
-    periodically when micro-batches are frequent enough for the log to
-    matter. ``out_path`` must differ from ``partials_path``: parquet
-    cannot be overwritten while a job is reading it."""
+    """Fold the HLL partial log down to one sketch per day (same union
+    expression the estimates use), written as the ``_batch=-1`` partition
+    of a fresh generation — run periodically when micro-batches are
+    frequent enough for the log to matter. ``out_path`` must differ from
+    ``partials_path``: parquet cannot be overwritten while a job is
+    reading it."""
     if out_path == partials_path:
         raise ValueError("compact_partials: out_path must be a fresh generation")
-    (
+    merged = (
         spark.read.parquet(partials_path)
         .groupBy("day")
         .agg(F.expr("hll_union_agg(sk)").alias("sk"))
-        .withColumn("batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .parquet(out_path)
     )
+    write_batch(merged, out_path, -1)
 
 
 def sketch_partials_stream(
@@ -190,55 +164,30 @@ def sketch_partials_stream(
     checkpoint: str | None = None,
     trigger_available_now: bool = True,
 ):
-    """Generic form of ``hll_partials_stream`` for the whole mergeable
-    Datasketches family: ``agg_sql`` is any sketch aggregate over the
-    batch's columns (e.g. ``kll_sketch_agg_double(value)`` for streaming
-    quantiles, ``theta_sketch_agg(user_id)`` for streaming set algebra).
-    Each micro-batch appends one (day, sk, batch_id) partial per day; the
-    matching union/estimate expression runs at read time
-    (``merge_estimate`` below). Same replay story as HLL: theta union is
-    value-idempotent like HLL; KLL union is NOT (re-inserting a replayed
-    partial re-weights ranks), so KLL deployments key the log by
-    (day, batch_id) and let ``merge_estimate`` dedup on it — which the
-    append schema already supports and the test exercises.
+    """Generic sketch partial log for the whole mergeable Datasketches
+    family: ``agg_sql`` is any sketch aggregate over the batch's columns
+    (e.g. ``kll_sketch_agg_double(value)`` for streaming quantiles,
+    ``theta_sketch_agg(user_id)`` for streaming set algebra). Each
+    micro-batch writes one (day, sk) partial per day; the matching
+    union/estimate expression runs at read time (``merge_estimate``).
     """
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            batch_df.withColumn("day", F.to_date(ts_col))
-            .groupBy("day")
-            .agg(F.expr(agg_sql).alias("sk"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out_path)
-        )
-
-    writer = events.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _partials_stream(
+        events,
+        out_path,
+        lambda b: b.groupBy(F.to_date(ts_col).alias("day")).agg(F.expr(agg_sql).alias("sk")),
+        checkpoint,
+        trigger_available_now,
+    )
 
 
 def merge_estimate(
-    spark: SparkSession,
-    partials_path: str,
-    estimate_sql: str,
-    dedup_replays: bool = True,
+    spark: SparkSession, partials_path: str, estimate_sql: str
 ) -> DataFrame:
     """Per-day estimates over a generic sketch-partial log:
     ``estimate_sql`` is the union+extract expression over column ``sk``
     (e.g. ``kll_sketch_get_quantile_double(kll_merge_agg_double(sk),
-    0.5)``). ``dedup_replays`` drops duplicate (day, batch_id) partials
-    first — a no-op for idempotent unions (HLL/theta), load-bearing for
-    rank sketches (KLL) where a replayed partial would re-weight the
-    merged distribution."""
+    0.5)``)."""
     p = spark.read.parquet(partials_path)
-    if dedup_replays:
-        p = p.dropDuplicates(["day", "batch_id"])
     return p.groupBy("day").agg(F.expr(estimate_sql).alias("est"))
 
 
@@ -258,42 +207,21 @@ def priority_sample_stream(
     pattern as the sketch rollups above. A Sequential-Poisson priority
     sample IS a mergeable summary: priority ``w/u`` is row-intrinsic, so
     top-k(slice₁ ∪ slice₂) = top-k(top-k(slice₁) ∪ top-k(slice₂)).  Each
-    micro-batch appends its per-stratum top-k candidate rows (≤ k rows per
+    micro-batch writes its per-stratum top-k candidate rows (≤ k rows per
     stratum per batch — bytes, not the batch); ``priority_sample_merge``
-    re-ranks the log at read time. Replays are idempotent after the
-    merge-side dedup on the row id (same md5 → same priority).
+    re-ranks the log at read time.
 
     ``weight_sql`` is a SQL expression over the batch columns (e.g.
     ``greatest(coalesce(value, 0.0), 0.0) + 1.0``); weights must be > 0.
     """
-    from streaming_feature_store_spark.operators.curation import (
-        weighted_priority_sample,
-    )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            weighted_priority_sample(
-                batch_df,
-                k,
-                F.expr(weight_sql),
-                id_col=id_col,
-                strata_col=strata_col,
-            )
-            .drop("samp_rank")
-            .withColumn("_w", F.expr(weight_sql))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out_path)
+    def reduce(b: DataFrame) -> DataFrame:
+        sample = weighted_priority_sample(
+            b, k, F.expr(weight_sql), id_col=id_col, strata_col=strata_col
         )
+        return sample.drop("samp_rank").withColumn("_w", F.expr(weight_sql))
 
-    writer = events.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _partials_stream(events, out_path, reduce, checkpoint, trigger_available_now)
 
 
 def priority_sample_merge(
@@ -305,17 +233,12 @@ def priority_sample_merge(
 ) -> DataFrame:
     """Global top-k over the candidate log — identical selection to the
     batch ``weighted_priority_sample`` over all rows ever streamed (the
-    test asserts set equality). Dedup on the row id first makes replayed
-    batches a no-op (same id → same md5 priority → same rank); the
-    surviving weight is picked DETERMINISTICALLY (max_by on batch_id, ties
-    on the larger weight) so an id streamed across batches with a changed
-    weight — outside the documented same-id-same-weight contract — still
-    yields one reproducible answer (latest write wins) instead of a
-    partition-order-dependent one."""
-    from streaming_feature_store_spark.operators.curation import (
-        weighted_priority_sample,
-    )
-
+    test asserts set equality). An id streamed in several batches keeps
+    one row, picked DETERMINISTICALLY (max_by on ``_batch``, ties on the
+    larger weight): same id → same md5 priority → same rank, and an id
+    whose weight changed across batches — outside the documented
+    same-id-same-weight contract — still yields one reproducible answer
+    (latest write wins) instead of a partition-order-dependent one."""
     keys = ([strata_col] if strata_col else []) + [id_col]
     raw = spark.read.parquet(partials_path)
     rest = [c for c in raw.columns if c not in keys]
@@ -323,14 +246,14 @@ def priority_sample_merge(
         raw.groupBy(*keys)
         .agg(
             F.max_by(
-                F.struct(*rest), F.struct("batch_id", "_w")
+                F.struct(*rest), F.struct("_batch", "_w")
             ).alias("_r")
         )
         .select(*keys, *[F.col("_r")[c].alias(c) for c in rest])
     )
     return weighted_priority_sample(
         p, k, F.col("_w"), id_col=id_col, strata_col=strata_col
-    ).drop("_w", "batch_id")
+    ).drop("_w", "_batch")
 
 
 def daily_metric_stream(
@@ -345,42 +268,27 @@ def daily_metric_stream(
     """Streaming feed for the CUSUM/level monitors (drift.py): per-batch
     (day, n, v_sum) partials — counts and decimal-exact sums are the
     simplest mergeable summaries of all, so the monitor's daily series is
-    maintained without ever re-scanning events.  Unlike the set sketches,
-    COUNT/SUM partials are NOT replay-idempotent; the log keys rows by
-    (day, batch_id) and ``daily_metric_series`` dedups on it, the same
-    contract as the KLL partials."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        v = (
-            F.sum(F.col(value_col).cast("decimal(18,4)"))
-            if value_col
-            else F.lit(None).cast("decimal(18,4)")
-        )
-        (
-            batch_df.withColumn("day", F.to_date(ts_col))
-            .groupBy("day")
-            .agg(F.count("*").alias("n"), v.alias("v_sum"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out_path)
-        )
-
-    writer = events.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    maintained without ever re-scanning events."""
+    v = (
+        F.sum(F.col(value_col).cast("decimal(18,4)"))
+        if value_col
+        else F.lit(None).cast("decimal(18,4)")
+    )
+    return _partials_stream(
+        events,
+        out_path,
+        lambda b: b.groupBy(F.to_date(ts_col).alias("day")).agg(
+            F.count("*").alias("n"), v.alias("v_sum")
+        ),
+        checkpoint,
+        trigger_available_now,
+    )
 
 
 def daily_metric_series(spark: SparkSession, partials_path: str) -> DataFrame:
     """Merge the partial log to the (day, m) series ``drift.
-    cusum_changepoint``-style monitors consume — COUNT partials sum;
-    replayed (day, batch_id) rows dedup first."""
-    p = spark.read.parquet(partials_path).dropDuplicates(["day", "batch_id"])
-    return p.groupBy("day").agg(
+    cusum_changepoint``-style monitors consume — COUNT partials sum."""
+    return spark.read.parquet(partials_path).groupBy("day").agg(
         F.sum("n").cast("double").alias("m"),
         F.sum("v_sum").cast("double").alias("v_sum"),
     )
@@ -396,51 +304,25 @@ def histogram_partials_stream(
 ):
     """Streaming twin of the persisted drift baseline
     (``operators/drift.histogram_index``): each micro-batch collapses to
-    its fixed-edge bucket counts — |features| x |buckets| rows, tagged
-    with the micro-batch id — appended to the partial log.  The drift
-    monitor then prices PSI-vs-baseline from
+    its fixed-edge bucket counts — |features| x |buckets| rows — in the
+    partial log.  The drift monitor then prices PSI-vs-baseline from
     :func:`merged_histogram_view` without ever rescanning events: the
     reference recomputes its expected distribution from the full
     training frame per check (training/drift_check.py:138-169); here the
     baseline is maintained BY the stream as it flows.
-
-    Bucket counts are additive (not idempotent), so the same provenance
-    discipline as :func:`algebraic_partials_stream` applies: the
-    batch_id rides along, a replayed micro-batch re-appends
-    byte-identical rows, and the read side deduplicates on
-    (feature, bucket, batch_id) before summing.
     """
-    from streaming_feature_store_spark.operators.drift import (
-        histogram_index,
+    return _partials_stream(
+        events, out_path, lambda b: histogram_index(b, specs), checkpoint, trigger_available_now
     )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
-            histogram_index(batch_df, specs)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out_path)
-        )
-
-    writer = events.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def merged_histogram_view(spark: SparkSession, partials_path: str) -> DataFrame:
-    """The live drift baseline from the histogram partial log: drop
-    replayed rows by provenance key, sum counts per (feature, bucket) —
-    bit-identical to ``histogram_index`` over all raw rows (integer
-    counts are order- and shard-independent), ready for
-    ``psi_from_histograms`` / ``histogram_quantiles``."""
+    """The live drift baseline from the histogram partial log: counts
+    summed per (feature, bucket) — bit-identical to ``histogram_index``
+    over all raw rows (integer counts are order- and shard-independent),
+    ready for ``psi_from_histograms`` / ``histogram_quantiles``."""
     return (
         spark.read.parquet(partials_path)
-        .dropDuplicates(["feature", "bucket", "batch_id"])
         .groupBy("feature", "bucket")
         .agg(F.sum("n").alias("n"))
     )

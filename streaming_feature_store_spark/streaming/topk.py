@@ -17,8 +17,10 @@ Design (the part that holds at scale):
   aggregate-sized, not event-sized); one window-partitioned rank keeps k
   rows per window.
 - **Dynamic partition overwrite by window**: a retried batch replaces its
-  own windows' partitions instead of double-appending (same
-  effectively-once discipline as the feature sink, T5).
+  own windows' partitions instead of double-appending: the replace rule
+  of the logs' ``sinks.write_batch`` (effectively-once, T5), keyed by
+  window instead of by batch id, so the serving read for a window stays
+  one partition scan.
 
 Late data past the watermark is dropped by the aggregation (T1 policy);
 the window that was already finalized is never reopened — the documented
@@ -30,6 +32,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+
+from streaming_feature_store_spark.streaming.sinks import _start_stream
 
 
 def trending_topk_stream(
@@ -75,9 +79,4 @@ def trending_topk_stream(
         writer = ranked.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         writer.partitionBy("window_start_s").parquet(out_path)
 
-    writer = counts.writeStream.outputMode("append").foreachBatch(sink)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_stream(counts, sink, checkpoint, trigger_available_now)

@@ -41,6 +41,22 @@ def test_decode_json_with_dlq(spark, tmp_path):
     assert spark.read.parquet(dlq).count() == 1  # the garbage row
 
 
+def test_route_dlq_leaves_no_cached_plan(spark, tmp_path):
+    """A long-running stream calls ``route_dlq`` once per micro-batch: no
+    call may leave a cached plan behind in the session."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    dlq = str(tmp_path / "dlq")
+    for i in range(3):
+        raw = spark.createDataFrame(
+            [(f'{{"user_id": {i}, "amount": 1.5}}',), (f"garbage {i}",)], "value string"
+        )
+        clean = route_dlq(decode_json(raw, EVENT_SCHEMA), dlq)
+        assert [r["user_id"] for r in clean.collect()] == [i]
+    assert cache.numCachedEntries() == before
+    assert spark.read.parquet(dlq).count() == 3
+
+
 @pytest.mark.slow
 def test_device_stream_join(spark, tmp_path):
     tx_schema = StructType(

@@ -303,6 +303,28 @@ def test_retention_drop_partitions(spark, tmp_path):
     assert kept == [3]  # whole-partition drop, no rewrite of survivors
 
 
+def test_retention_drop_partitions_cuts_off_in_utc(tmp_path, monkeypatch):
+    """``_date`` is a UTC day (the session zone), so the cutoff day is too,
+    whatever the host's zone: 20:00 UTC is already the next day in Tokyo,
+    and a local cutoff would drop a day whose last hours are still inside
+    the horizon."""
+    import time
+
+    path = tmp_path / "log"
+    for day in ("2024-01-15", "2024-01-16", "2024-01-17"):
+        (path / f"_date={day}").mkdir(parents=True)
+    now_s = int(dt.datetime(2024, 1, 21, 20, tzinfo=dt.timezone.utc).timestamp())
+    monkeypatch.setenv("TZ", "Asia/Tokyo")
+    time.tzset()
+    try:
+        dropped = retention_drop_partitions(str(path), horizon_s=5 * 86_400, now_s=now_s)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert dropped == ["_date=2024-01-15"]
+    assert sorted(os.listdir(path)) == ["_date=2024-01-16", "_date=2024-01-17"]
+
+
 def test_coerce_typed_strings(spark):
     df = spark.createDataFrame(
         [("1.5", "7", "True", "oops"), ("bad", "x", "false", "2")],

@@ -49,6 +49,36 @@ def _run(spark, src, latest, log, ckpt):
     q.awaitTermination(120)
 
 
+def _log_rows(spark, path):
+    """The log's rows as a multiset (binary sketch columns as bytes)."""
+    from collections import Counter
+
+    return Counter(
+        tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+        for r in spark.read.parquet(path).collect()
+    )
+
+
+def _replay_last_batch(spark, start, ckpt, log):
+    """Re-run a stream's last micro-batch for real: delete its commit from
+    the checkpoint and restart the query there with ``start()``, which
+    re-runs that batch under the same id over the same input. The log at
+    ``log`` must then hold one ``_batch=<id>`` partition per batch, with
+    the same rows as before the replay."""
+    commits = os.path.join(ckpt, "commits")
+    batches = sorted(int(f) for f in os.listdir(commits) if f.isdigit())
+    parts = sorted(d for d in os.listdir(log) if d.startswith("_batch="))
+    assert parts == sorted(f"_batch={b}" for b in batches)
+    before = _log_rows(spark, log)
+    for f in (str(batches[-1]), f".{batches[-1]}.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+    start().awaitTermination(120)
+    assert sorted(int(f) for f in os.listdir(commits) if f.isdigit()) == batches
+    assert sorted(d for d in os.listdir(log) if d.startswith("_batch=")) == parts
+    assert _log_rows(spark, log) == before
+
+
 def test_pipeline_end_to_end(spark, tmp_path):
     src = str(tmp_path / "src")
     latest = str(tmp_path / "latest")
@@ -419,7 +449,7 @@ def test_streaming_hll_rollup_matches_batch(spark, tmp_path):
     """VERDICT r3 item #6: per-micro-batch HLL sketch partials appended in
     foreachBatch, merged at read time, must equal the batch q108-style
     estimate on the same data — and stay correct when the same partial is
-    appended twice (union idempotency = effectively-once for free)."""
+    its last micro-batch is replayed from the checkpoint."""
     from streaming_feature_store_spark.streaming.sketches import (
         compact_partials,
         hll_estimate,
@@ -451,12 +481,14 @@ def test_streaming_hll_rollup_matches_batch(spark, tmp_path):
          for i in range(5)],
     )
 
-    stream = read_file_stream(spark, src, SCHEMA, max_files_per_trigger=1)
-    q = hll_partials_stream(spark, stream, out, checkpoint=ckpt)
-    q.awaitTermination(120)
+    def start():
+        stream = read_file_stream(spark, src, SCHEMA, max_files_per_trigger=1)
+        return hll_partials_stream(spark, stream, out, checkpoint=ckpt)
+
+    start().awaitTermination(120)
 
     partials = spark.read.parquet(out)
-    assert partials.select("batch_id").distinct().count() >= 2  # really merged
+    assert partials.select("_batch").distinct().count() >= 2  # really merged
 
     batch_truth = {
         r["day"]: r["n"]
@@ -476,10 +508,8 @@ def test_streaming_hll_rollup_matches_batch(spark, tmp_path):
     # at these cardinalities (11 and 55 distinct) lgK=12 HLL is exact
     assert est == batch_truth
 
-    # idempotency: re-append an existing partial (a replayed batch) — the
-    # union must not change any estimate
-    one = spark.read.parquet(out).limit(1)
-    one.write.mode("append").parquet(out)
+    # a replayed micro-batch replaces its own partition: no estimate moves
+    _replay_last_batch(spark, start, ckpt, out)
     est2 = {r["day"]: r["est"] for r in hll_estimate(spark, out, "day").collect()}
     assert est2 == batch_truth
 
@@ -488,6 +518,7 @@ def test_streaming_hll_rollup_matches_batch(spark, tmp_path):
     assert sum(r["est"] for r in wk) >= max(batch_truth.values())
     gen2 = str(tmp_path / "partials_gen2")
     compact_partials(spark, out, gen2)
+    assert [d for d in os.listdir(gen2) if "=" in d] == ["_batch=-1"]
     est3 = {r["day"]: r["est"] for r in hll_estimate(spark, gen2, "day").collect()}
     assert est3 == batch_truth
 
@@ -495,9 +526,9 @@ def test_streaming_hll_rollup_matches_batch(spark, tmp_path):
 def test_streaming_kll_quantile_matches_batch(spark, tmp_path):
     """Generic sketch-partial stream with a RANK sketch (KLL): per-batch
     quantile partials merged at read time must match the batch KLL median
-    on the same data, and a replayed partial must be neutralized by the
-    (day, batch_id) dedup — KLL union, unlike HLL/theta, is not
-    value-idempotent."""
+    on the same data, and stay equal when the last micro-batch is replayed
+    from the checkpoint — KLL union, unlike HLL/theta, is not
+    value-idempotent, so a replay must replace its partials."""
     from streaming_feature_store_spark.streaming.sketches import (
         merge_estimate,
         sketch_partials_stream,
@@ -515,14 +546,16 @@ def test_streaming_kll_quantile_matches_batch(spark, tmp_path):
     _write_batch(spark, src, rows1)
     _write_batch(spark, src, rows2)
 
-    stream = read_file_stream(spark, src, SCHEMA, max_files_per_trigger=1)
-    q = sketch_partials_stream(
-        spark, stream, out, "kll_sketch_agg_double(value)", checkpoint=ckpt
-    )
-    q.awaitTermination(120)
+    def start():
+        stream = read_file_stream(spark, src, SCHEMA, max_files_per_trigger=1)
+        return sketch_partials_stream(
+            spark, stream, out, "kll_sketch_agg_double(value)", checkpoint=ckpt
+        )
+
+    start().awaitTermination(120)
 
     partials = spark.read.parquet(out)
-    assert partials.select("batch_id").distinct().count() >= 2
+    assert partials.select("_batch").distinct().count() >= 2
 
     est_sql = "kll_sketch_get_quantile_double(kll_merge_agg_double(sk), 0.5)"
     streamed = merge_estimate(spark, out, est_sql).collect()[0]["est"]
@@ -535,10 +568,10 @@ def test_streaming_kll_quantile_matches_batch(spark, tmp_path):
     )
     assert streamed == batch
 
-    # replay: duplicate one partial row. Without dedup the re-weighted
-    # merge may move the median; with the (day, batch_id) dedup it cannot.
-    spark.read.parquet(out).limit(1).write.mode("append").parquet(out)
-    replayed = merge_estimate(spark, out, est_sql, dedup_replays=True).collect()
+    # replay: a duplicated partial would re-weight the merged median; the
+    # replayed batch replaces its own partition instead
+    _replay_last_batch(spark, start, ckpt, out)
+    replayed = merge_estimate(spark, out, est_sql).collect()
     assert replayed[0]["est"] == batch
 
 
@@ -547,7 +580,7 @@ def test_streaming_priority_sample_matches_batch(spark, tmp_path):
     """The Sequential-Poisson sample is a mergeable summary: per-batch
     top-k candidate partials re-ranked at read time must select the
     IDENTICAL rows as the batch sampler over all streamed rows — and a
-    replayed partial must change nothing (id dedup -> same priority)."""
+    replayed micro-batch must change nothing."""
     from streaming_feature_store_spark.operators.curation import (
         weighted_priority_sample,
     )
@@ -572,15 +605,17 @@ def test_streaming_priority_sample_matches_batch(spark, tmp_path):
         _write_batch(spark, src, batch)
 
     w_sql = "greatest(coalesce(value, 0.0), 0.0) + 1.0"
-    stream = read_file_stream(spark, src, SCHEMA, max_files_per_trigger=1)
-    q = priority_sample_stream(
-        spark, stream, out, k=7, weight_sql=w_sql,
-        id_col="event_id", strata_col="event_type", checkpoint=ckpt,
-    )
-    q.awaitTermination(120)
+    def start():
+        stream = read_file_stream(spark, src, SCHEMA, max_files_per_trigger=1)
+        return priority_sample_stream(
+            spark, stream, out, k=7, weight_sql=w_sql,
+            id_col="event_id", strata_col="event_type", checkpoint=ckpt,
+        )
+
+    start().awaitTermination(120)
 
     partials = spark.read.parquet(out)
-    assert partials.select("batch_id").distinct().count() >= 2
+    assert partials.select("_batch").distinct().count() >= 2
 
     got = {
         (r["event_type"], r["event_id"], r["samp_rank"])
@@ -597,8 +632,8 @@ def test_streaming_priority_sample_matches_batch(spark, tmp_path):
     }
     assert got == want
 
-    # replay: duplicate one partial file's rows -> merged sample unchanged
-    partials.limit(3).write.mode("append").parquet(out)
+    # replay the last micro-batch -> merged sample unchanged
+    _replay_last_batch(spark, start, ckpt, out)
     got2 = {
         (r["event_type"], r["event_id"], r["samp_rank"])
         for r in priority_sample_merge(
@@ -612,7 +647,7 @@ def test_streaming_priority_sample_matches_batch(spark, tmp_path):
 def test_streaming_daily_metric_feeds_cusum(spark, tmp_path):
     """The monitor feed: per-batch (day, count) partials merged at read
     time must give the same CUSUM series as drift.cusum_changepoint over
-    the raw events — and a replayed partial must change nothing."""
+    the raw events — and a replayed micro-batch must change nothing."""
     from streaming_feature_store_spark.operators.drift import (
         cusum_changepoint,
     )
@@ -636,12 +671,14 @@ def test_streaming_daily_metric_feeds_cusum(spark, tmp_path):
         rows += batch
         _write_batch(spark, src, batch)
 
-    stream = read_file_stream(spark, src, SCHEMA, max_files_per_trigger=1)
-    q = daily_metric_stream(spark, stream, out, checkpoint=ckpt)
-    q.awaitTermination(120)
+    def start():
+        stream = read_file_stream(spark, src, SCHEMA, max_files_per_trigger=1)
+        return daily_metric_stream(spark, stream, out, checkpoint=ckpt)
+
+    start().awaitTermination(120)
 
     partials = spark.read.parquet(out)
-    assert partials.select("batch_id").distinct().count() >= 2
+    assert partials.select("_batch").distinct().count() >= 2
     # same day split across batches -> merge is load-bearing
     assert partials.groupBy("day").count().filter("count > 1").count() > 0
 
@@ -668,8 +705,8 @@ def test_streaming_daily_metric_feeds_cusum(spark, tmp_path):
     )
     assert got == batch_truth
 
-    # replay a partial -> dedup on (day, batch_id) keeps the series fixed
-    partials.limit(2).write.mode("append").parquet(out)
+    # replay the last micro-batch -> the series stays fixed
+    _replay_last_batch(spark, start, ckpt, out)
     got2 = cusum_rows(daily_metric_series(spark, out).select("day", "m"))
     assert got2 == batch_truth
 
@@ -681,8 +718,8 @@ def test_streaming_algebraic_partials_match_batch(spark, tmp_path):
     per-micro-batch ALGEBRAIC partials (exact decimal n/Σx/Σx²/min/max)
     appended in foreachBatch, merged at read time, must equal the direct
     one-pass aggregation over all raw rows, and stay equal when a
-    replayed micro-batch re-appends its state rows (provenance dedup =
-    the algebraic twin of sketch-union idempotency)."""
+    micro-batch is replayed from the checkpoint (it replaces its own
+    partition of state rows)."""
     from streaming_feature_store_spark.streaming.sketches import (
         algebraic_partials_stream,
         merged_algebraic_view,
@@ -705,12 +742,14 @@ def test_streaming_algebraic_partials_match_batch(spark, tmp_path):
     for lo, hi in ((0, 24), (24, 42), (42, 52)):
         _write_batch(spark, src, rows[lo:hi])
 
-    stream = read_file_stream(spark, src, SCHEMA, max_files_per_trigger=1)
-    q = algebraic_partials_stream(spark, stream, out, checkpoint=ckpt)
-    q.awaitTermination(120)
+    def start():
+        stream = read_file_stream(spark, src, SCHEMA, max_files_per_trigger=1)
+        return algebraic_partials_stream(spark, stream, out, checkpoint=ckpt)
+
+    start().awaitTermination(120)
 
     partials = spark.read.parquet(out)
-    assert partials.select("batch_id").distinct().count() >= 2
+    assert partials.select("_batch").distinct().count() >= 2
 
     def view():
         return {
@@ -765,12 +804,9 @@ def test_streaming_algebraic_partials_match_batch(spark, tmp_path):
     }
     assert view() == batch_truth
 
-    # replay: re-append one micro-batch's state rows verbatim (what a
-    # checkpoint-restart redelivery produces) — the provenance dedup must
-    # keep the merged view bit-identical
-    replay = spark.read.parquet(out).filter(F.col("batch_id") == 0)
-    assert replay.count() > 0
-    replay.write.mode("append").parquet(out)
+    # replay: a checkpoint restart re-runs the last micro-batch under its
+    # id — the merged view must stay bit-identical
+    _replay_last_batch(spark, start, ckpt, out)
     assert view() == batch_truth
 
 
@@ -934,8 +970,8 @@ def test_streaming_histogram_partials_match_batch(spark, tmp_path):
     same stream ≡ batch replay proof as the sketch/algebraic logs —
     per-micro-batch fixed-edge bucket counts appended in foreachBatch,
     merged at read time, must equal histogram_index over all raw rows,
-    stay equal when a replayed micro-batch re-appends its rows
-    (provenance dedup), and feed psi_from_histograms directly."""
+    stay equal when a micro-batch is replayed from the checkpoint, and
+    feed psi_from_histograms directly."""
     from streaming_feature_store_spark.operators.drift import (
         histogram_index,
         psi_from_histograms,
@@ -958,9 +994,11 @@ def test_streaming_histogram_partials_match_batch(spark, tmp_path):
     for lo, hi in ((0, 25), (25, 45), (45, 60)):
         _write_batch(spark, src, rows[lo:hi])
 
-    stream = read_file_stream(spark, src, SCHEMA, max_files_per_trigger=1)
-    q = histogram_partials_stream(spark, stream, out, specs, checkpoint=ckpt)
-    q.awaitTermination(120)
+    def start():
+        stream = read_file_stream(spark, src, SCHEMA, max_files_per_trigger=1)
+        return histogram_partials_stream(spark, stream, out, specs, checkpoint=ckpt)
+
+    start().awaitTermination(120)
 
     def view():
         return {
@@ -976,12 +1014,8 @@ def test_streaming_histogram_partials_match_batch(spark, tmp_path):
     }
     assert view() == batch_truth
 
-    # replay: re-append one batch's rows byte-identically -> unchanged
-    partials = spark.read.parquet(out)
-    one = partials.filter(
-        F.col("batch_id") == partials.agg(F.min("batch_id")).collect()[0][0]
-    )
-    one.write.mode("append").parquet(out)
+    # replay the last micro-batch from the checkpoint -> unchanged
+    _replay_last_batch(spark, start, ckpt, out)
     assert view() == batch_truth
 
     # the merged view IS a baseline: psi against itself = 0 per feature
