@@ -5,12 +5,15 @@ persist is load-bearing (Spark gives zero ReusedExchange for shared
 subplans consumed by multiple branches — without the persist the lineage
 rebuilds once per consumer; measured 104 s vs 50 s on bigram_pmi at 100 k
 docs).  A long-lived session that calls them repeatedly would accumulate
-cached lineage until LRU pressure (ADVICE r3), so every such persist is
-registered here and released explicitly after the consuming action.
+cached lineage until LRU pressure, so every such persist is registered
+here and released explicitly after the consuming action.
 
-Two release functions with DIFFERENT safety contracts (ADVICE r6 — the
-round-6 combined release silently broke the long-standing "release is
-always safe" meaning):
+A local checkpoint's blocks are out of ``DataFrame.unpersist``'s reach,
+but the frame an eager ``localCheckpoint`` returns is a ``LogicalRDD``
+over exactly the RDD that holds them; ``local_checkpoint_tracked``
+registers that RDD's id when it makes the checkpoint.
+
+Release functions with DIFFERENT safety contracts:
 
 - ``release_cached_intermediates()`` — persists only.  Always safe: a
   released persist merely recomputes on the next action.
@@ -18,17 +21,8 @@ always safe" meaning):
   frames built on them (truncated lineage cannot recompute), so call it
   only after checkpoint-backed results — e.g. ``negative_sample`` /
   ``dedup_clusters`` / ``pagerank`` output — are fully consumed.
-- ``release_all()`` — both, same invalidation caveat.
-
-Thread-safety (ADVICE r6): the checkpoint-id capture brackets an eager
-job with two storage-info snapshots; a concurrent persist on another
-driver thread (this repo's streaming foreachBatch sinks run batch jobs
-on separate threads — a supported Spark pattern) could land inside the
-bracket and be mis-claimed.  All snapshot+checkpoint+capture sequences
-therefore serialize on a module lock, and the capture FAILS SAFE: if the
-delta contains anything other than exactly one RDD per checkpoint call,
-nothing is claimed and the blocks are left to JVM GC — leaking until GC
-is recoverable, freeing a live frame's checkpoint is not.
+- ``release_checkpoint(frame)`` — one checkpoint, same caveat.
+- ``release_all()`` — persists and checkpoints, same caveat.
 """
 
 from __future__ import annotations
@@ -37,11 +31,9 @@ import threading
 
 from pyspark.sql import DataFrame
 
-_LOCK = threading.RLock()
+_LOCK = threading.Lock()
 _CACHED_INTERMEDIATES: list[DataFrame] = []
-_CHECKPOINTED: list[tuple["object", int]] = []  # (SparkSession, rdd id)
-# per-application result of the discriminator self-check
-_DISCRIMINATOR_OK: dict[str, bool] = {}
+_CHECKPOINTED: list[tuple["object", int]] = []  # (SparkContext, rdd id)
 
 
 def persist_tracked(frame: DataFrame) -> DataFrame:
@@ -88,11 +80,8 @@ def release_checkpoints() -> int:
         with _LOCK:
             if not _CHECKPOINTED:
                 break
-            session, rid = _CHECKPOINTED.pop()
-        try:
-            n += _unpersist_ids(session.sparkContext._jsc.sc(), [rid])
-        except Exception:  # session stopped — nothing to release
-            pass
+            entry = _CHECKPOINTED.pop()
+        n += _unpersist(*entry)
     return n
 
 
@@ -102,137 +91,66 @@ def release_all() -> int:
     return release_cached_intermediates() + release_checkpoints()
 
 
-def _discriminator_ok(spark) -> bool:
-    """One-time per-application self-check of the MapPartitionsRDD name
-    filter (it is a Spark implementation detail, not API — ADVICE r6):
-    localCheckpoint a trivial frame and require the storage delta to be
-    exactly one RDD with the expected name.  If the Spark version ever
-    renames it, tracking disables itself for the session (blocks fall
-    back to JVM GC) instead of silently never matching — or worse,
-    matching the wrong entries.  MUST be called with ``_LOCK`` held: the
-    probe is itself a snapshot+checkpoint+capture bracket, and running
-    it concurrently with tracked checkpoints would pollute both deltas
-    (the exact race the lock exists to close)."""
-    key = spark.sparkContext.applicationId
-    ok = _DISCRIMINATOR_OK.get(key)
-    if ok is None:
-        sc = spark.sparkContext._jsc.sc()
-        before = {i.id() for i in sc.getRDDStorageInfo()}
-        probe = spark.range(2).localCheckpoint(eager=True)
-        new = [i for i in sc.getRDDStorageInfo() if i.id() not in before]
-        ok = len(new) == 1 and new[0].name() == "MapPartitionsRDD"
-        _DISCRIMINATOR_OK[key] = ok
-        _unpersist_ids(sc, [i.id() for i in new])
-        del probe
-    return ok
-
-
 def local_checkpoint_tracked(frame: DataFrame) -> DataFrame:
     """Eager ``localCheckpoint`` whose materialized blocks are released
-    by ``release_checkpoints()`` / ``release_all()``.
-
-    ``DataFrame.unpersist`` cannot reach a local checkpoint's blocks
-    (they belong to an internal RDD the public API never exposes — both
-    ``df.rdd`` and ``queryExecution().toRdd()`` return derived RDDs, as
-    verified empirically), so without tracking they live until JVM GC —
-    the unbounded-cache-growth failure this module exists to prevent.
-    The checkpointed RDD id is captured as the storage-info delta around
-    the eager materialization; the snapshot+checkpoint+capture sequence
-    holds the module lock so concurrent tracked checkpoints (e.g. from
-    foreachBatch threads) cannot interleave, and the capture fails safe
-    — an ambiguous delta (≠ 1 new RDD) claims nothing and leaves the
-    blocks to JVM GC.
+    by ``release_checkpoints()`` / ``release_all()``; until then they are
+    left to JVM GC, as an untracked checkpoint's are.
 
     Releasing INVALIDATES the returned frame — unlike a released
     persist, which merely recomputes, a freed checkpoint CANNOT (its
     lineage is truncated), so any later action on the frame throws.
     Consume (write/collect) checkpoint-backed results fully before
-    calling ``release_checkpoints()``.
-
-    The delta is filtered to RDDs literally named "MapPartitionsRDD":
-    the eager checkpoint job can materialize OTHER frames' cold caches
-    mid-scan, and those must not be claimed — CacheManager entries
-    (``df.cache()``) carry their plan string as the RDD name, so the
-    filter excludes them.  The name is a Spark implementation detail;
-    ``_discriminator_ok`` verifies it once per session and disables
-    tracking (GC fallback) on mismatch.
+    releasing.
     """
-    sc = frame.sparkSession.sparkContext._jsc.sc()
+    out = frame.localCheckpoint(eager=True)
+    entry = (frame.sparkSession.sparkContext, _checkpoint_rdd_id(out))
     with _LOCK:
-        if not _discriminator_ok(frame.sparkSession):
-            return frame.localCheckpoint(eager=True)
-        before = {i.id() for i in sc.getRDDStorageInfo()}
-        out = frame.localCheckpoint(eager=True)
-        new_ids = _capture_new_checkpoint_ids(sc, before)
-        if len(new_ids) == 1:  # ambiguous delta → fail safe, leave to GC
-            _CHECKPOINTED.append((frame.sparkSession, new_ids[0]))
+        _CHECKPOINTED.append(entry)
     return out
 
 
-def _capture_new_checkpoint_ids(sc, before: set) -> list[int]:
-    """Ids of RDDs cached since ``before`` that are literally named
-    "MapPartitionsRDD" — the local-checkpoint discriminator (CacheManager
-    entries carry their plan string as the name).  Single point of truth
-    for the three trackers."""
-    return [
-        i.id()
-        for i in sc.getRDDStorageInfo()
-        if i.id() not in before and i.name() == "MapPartitionsRDD"
-    ]
-
-
-def _unpersist_ids(sc, ids) -> int:
-    """Best-effort unpersist of checkpoint RDD ids via the persistent-RDD
-    registry; already-cleaned ids are skipped silently."""
-    n = 0
-    pm = sc.getPersistentRDDs()
-    for rid in ids or []:
-        try:
-            opt = pm.get(rid)
-            if not opt.isEmpty():
-                opt.get().unpersist(False)
-                n += 1
-        except Exception:
-            pass
-    return n
-
-
-def track_checkpoint_ids(session, ids) -> None:
-    """Register already-captured checkpoint ids (e.g. an iteration loop's
-    FINAL round, returned by ``rolling_local_checkpoint``) for release by
-    ``release_checkpoints()`` — with the same contract: release only
-    after the frames built on them are fully consumed."""
+def release_checkpoint(frame: DataFrame) -> int:
+    """Free the blocks of ``frame``, a frame ``local_checkpoint_tracked``
+    returned, and stop tracking them.  Invalidates ``frame`` and every
+    frame built on it.  Returns 1 if blocks were freed, else 0."""
+    entry = (frame.sparkSession.sparkContext, _checkpoint_rdd_id(frame))
     with _LOCK:
-        for rid in ids or []:
-            _CHECKPOINTED.append((session, rid))
+        if entry in _CHECKPOINTED:
+            _CHECKPOINTED.remove(entry)
+    return _unpersist(*entry)
 
 
 def rolling_local_checkpoint(
-    frame: DataFrame, prev_ids: list[int] | None
-) -> tuple[DataFrame, list[int]]:
-    """Iteration form of ``local_checkpoint_tracked``: eagerly checkpoint
-    the round's frame, then free the PREVIOUS round's checkpoint blocks —
-    once the new checkpoint is materialized (data copied, not derived),
-    the superseded round can never be read again, so waiting for JVM GC
-    to reclaim it just multiplies peak storage by the round count
-    (measured: 10-iteration PageRank left 9 superseded (node, rank)
-    checkpoints cached — O(rounds × nodes) where O(nodes) suffices).
+    frame: DataFrame, superseded: DataFrame | None
+) -> DataFrame:
+    """Iteration form of ``local_checkpoint_tracked``: checkpoint the
+    round's frame, then free ``superseded`` (the previous round's
+    checkpoint, or None).  Once the new checkpoint is materialized (data
+    copied, not derived) the superseded round can never be read again,
+    so waiting for JVM GC to reclaim it just multiplies peak storage by
+    the round count (measured: 10-iteration PageRank left 9 superseded
+    (node, rank) checkpoints cached — O(rounds × nodes) where O(nodes)
+    suffices).  The returned checkpoint stays tracked."""
+    out = local_checkpoint_tracked(frame)
+    if superseded is not None:
+        release_checkpoint(superseded)
+    return out
 
-    Same lock + MapPartitionsRDD-name discrimination + ambiguous-delta
-    fail-safe as ``local_checkpoint_tracked``; the FINAL round's ids are
-    returned so the caller can hand them to ``track_checkpoint_ids`` (or
-    leave them to GC when the result frame escapes to the caller, as
-    ``pagerank`` does — releasing the returned frame's own blocks would
-    invalidate it).
-    """
-    sc = frame.sparkSession.sparkContext._jsc.sc()
-    with _LOCK:
-        if not _discriminator_ok(frame.sparkSession):
-            return frame.localCheckpoint(eager=True), []
-        before = {i.id() for i in sc.getRDDStorageInfo()}
-        out = frame.localCheckpoint(eager=True)
-        new_ids = _capture_new_checkpoint_ids(sc, before)
-        if len(new_ids) != 1:  # ambiguous → claim nothing, GC fallback
-            new_ids = []
-        _unpersist_ids(sc, prev_ids)
-    return out, new_ids
+
+def _checkpoint_rdd_id(frame: DataFrame) -> int:
+    """Id of the RDD holding an eager local checkpoint's blocks: the
+    checkpointed frame's plan is a ``LogicalRDD`` over it."""
+    return frame._jdf.logicalPlan().rdd().id()
+
+
+def _unpersist(sc, rid: int) -> int:
+    """Best-effort unpersist of RDD ``rid`` via the persistent-RDD
+    registry; an RDD already cleaned (or a stopped session) counts 0."""
+    try:
+        opt = sc._jsc.sc().getPersistentRDDs().get(rid)
+        if opt.isEmpty():
+            return 0
+        opt.get().unpersist(False)
+        return 1
+    except Exception:
+        return 0

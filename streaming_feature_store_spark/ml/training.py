@@ -245,16 +245,20 @@ def build_pipeline(cfg: TrainConfig):
     return Pipeline(stages=[*stages, assembler, scaler, clf])
 
 
-def _transform(model, df: DataFrame) -> DataFrame:
-    """``model.transform(df)`` after dropping each stage's training summary,
-    in place. A summary holds the training frame's session, and once that
-    session has used an ``Observation`` (``watermarks.with_observation``),
-    Spark 4.1.2 cannot serialize it into a task:
-    ``NotSerializableException: ObservationManager``. Nothing here reads a
-    summary."""
+def _drop_summaries(model, spark) -> None:
+    """Drop each stage's training summary, in place. A summary holds the
+    training frame's session, and once that session has used an
+    ``Observation`` (``watermarks.with_observation``), Spark 4.1.2 cannot
+    serialize it into a task: ``NotSerializableException:
+    ObservationManager``. Nothing here reads a summary."""
     for stage in model.stages:
         if getattr(stage, "hasSummary", False):
-            stage._java_obj.setSummary(df.sparkSession._jvm.scala.Option.empty())
+            stage._java_obj.setSummary(spark._jvm.scala.Option.empty())
+
+
+def _transform(model, df: DataFrame) -> DataFrame:
+    """``model.transform(df)`` after ``_drop_summaries``."""
+    _drop_summaries(model, df.sparkSession)
     return model.transform(df)
 
 
@@ -314,12 +318,20 @@ def cross_validate(
     """M7: k-fold CV over the pipeline (StratifiedKFold analog —
     models.py:139-156). Returns mean AUC across folds; folds run in
     parallel on the cluster via CrossValidator's parallelism knob."""
+    from pyspark.ml import Pipeline
     from pyspark.ml.evaluation import BinaryClassificationEvaluator
     from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 
-    pipeline = build_pipeline(cfg)
+    class _SummaryFreePipeline(Pipeline):
+        # the evaluator transforms every fold model: drop the summaries
+        # at fit, as ``_transform`` does before a transform
+        def _fit(self, dataset):
+            model = super()._fit(dataset)
+            _drop_summaries(model, dataset.sparkSession)
+            return model
+
     cv = CrossValidator(
-        estimator=pipeline,
+        estimator=_SummaryFreePipeline(stages=build_pipeline(cfg).getStages()),
         estimatorParamMaps=ParamGridBuilder().build(),
         evaluator=BinaryClassificationEvaluator(
             labelCol=cfg.label_col, metricName="areaUnderROC"

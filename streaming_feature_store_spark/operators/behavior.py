@@ -49,12 +49,13 @@ def global_row_number(
     ascending key ranges to ascending partition ids, so
     ``offset + local_rank == global ROW_NUMBER`` exactly.
 
-    The ranked frame is eagerly ``localCheckpoint``-ed (tracked): the rank
-    depends on ``spark_partition_id()`` and the sampled partitioner
-    boundaries being identical across the counts collect and the returned
-    frame's consumers — a persist only guarantees that until eviction.
-    Like every tracked checkpoint, ``cacheutil.release_checkpoints()``
-    invalidates the returned frame; consume it first.
+    The ranked frame is a tracked eager local checkpoint
+    (``cacheutil.local_checkpoint_tracked``): the rank depends on
+    ``spark_partition_id()`` and the sampled partitioner boundaries being
+    identical across the counts collect and the returned frame's
+    consumers — a persist only guarantees that until eviction.
+    ``cacheutil.release_checkpoints()`` invalidates the returned frame;
+    consume it first.
     """
     from streaming_feature_store_spark.cacheutil import (
         local_checkpoint_tracked,

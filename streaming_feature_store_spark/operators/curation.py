@@ -755,13 +755,10 @@ def negative_sample(
     local checkpoint blocks; the right trade in a batch sampling job
     that simply reruns.
 
-    The checkpoint is TRACKED (``cacheutil.local_checkpoint_tracked``),
-    so ``release_checkpoints()`` / ``release_all()`` frees its blocks —
-    and, per that contract, INVALIDATES this function's returned frame
-    (the truncated lineage cannot recompute a freed checkpoint): write
-    or collect the sample before releasing.  The always-safe
-    ``release_cached_intermediates()`` does NOT touch it (ADVICE r6
-    split).
+    The checkpoint is tracked (``cacheutil.local_checkpoint_tracked``):
+    ``release_checkpoints()`` / ``release_all()`` frees its blocks and
+    INVALIDATES the returned frame, so write or collect the sample
+    first; ``release_cached_intermediates()`` leaves it alone.
     """
     from streaming_feature_store_spark.cacheutil import (
         local_checkpoint_tracked,

@@ -617,7 +617,10 @@ def dedup_clusters(
     other).
 
     Iteration hygiene (measured, 700k-edge chain graph): every round's
-    output is lineage-truncated with ``localCheckpoint(eager=True)``.
+    output is lineage-truncated with a tracked eager local checkpoint
+    (``cacheutil.rolling_local_checkpoint``, which frees the superseded
+    round's blocks; the result's stay tracked until
+    ``release_checkpoints()``, and the edges' are freed before return).
     ``persist()`` alone is NOT enough — each round's plan embeds the
     previous round's twice (the pointer-jump self-join), so Catalyst
     re-analysis grows exponentially even though execution reads cache
@@ -691,26 +694,29 @@ def dedup_clusters(
             f"node {out_type}, cluster_id {out_type}",
         )
     parts = max(1, min(int(n_edges // 250_000) + 1, 4096))
-    edges_c = edges.repartition(parts, "b").localCheckpoint(eager=True)
-    edges.unpersist()
-    edges = edges_c
     from streaming_feature_store_spark.cacheutil import (
+        local_checkpoint_tracked,
+        release_checkpoint,
         rolling_local_checkpoint,
     )
 
+    edges_c = local_checkpoint_tracked(edges.repartition(parts, "b"))
+    edges.unpersist()
+    edges = edges_c
     # Rolling release (same contract as pagerank's loop): each round's
-    # checkpoint frees the superseded round's blocks as soon as the new
-    # one is materialized, so peak checkpoint storage is O(nodes) for
-    # the whole fixpoint instead of O(rounds x nodes)-until-GC. The
-    # per-round ids chain stepped -> jumped -> next stepped; the FINAL
-    # jumped's blocks are left alive (the returned frame reads them).
-    labels, _lbl_ids = rolling_local_checkpoint(
+    # checkpoint frees the superseded one as soon as it is materialized,
+    # so peak checkpoint storage is O(nodes) for the whole fixpoint
+    # instead of O(rounds x nodes)-until-GC. The chain runs stepped ->
+    # jumped -> next stepped; the FINAL jumped stays (the returned frame
+    # reads it), and the edges are freed once the loop ends.
+    ck = rolling_local_checkpoint(
         edges.select(F.col("a").alias("node"))
         .distinct()
         .repartition(parts, "node")
         .withColumn("label", F.col("node")),
         None,
     )
+    labels = ck
     changed = -1  # max_iter=0 must raise the diagnostic, not NameError
     for _ in range(max_iter):
         nbr_min = (
@@ -722,7 +728,7 @@ def dedup_clusters(
         # nbr_min join is inside stepped's plan; jumped reads only
         # stepped), so the previous generation frees HERE — two live
         # checkpoint generations at peak, never three
-        stepped, _step_ids = rolling_local_checkpoint(
+        stepped = rolling_local_checkpoint(
             labels.join(nbr_min, labels["node"] == nbr_min["a"], "left")
             .select(
                 "node",
@@ -731,14 +737,14 @@ def dedup_clusters(
                     F.col("label"), F.coalesce("nbr_label", "label")
                 ).alias("label"),
             ),
-            _lbl_ids,
+            ck,
         )
         # pointer jumping: label(v) <- label(label(v))
         parent = stepped.select(
             F.col("node").alias("p_node"), F.col("label").alias("p_label")
         )
         # materializing jumped supersedes this round's stepped
-        jumped, _lbl_ids = rolling_local_checkpoint(
+        ck = rolling_local_checkpoint(
             stepped.join(parent, stepped["label"] == parent["p_node"], "left")
             .select(
                 "node",
@@ -747,10 +753,10 @@ def dedup_clusters(
                     F.col("label"), F.coalesce("p_label", "label")
                 ).alias("label"),
             ),
-            _step_ids,
+            stepped,
         )
-        changed = jumped.filter(F.col("label") != F.col("old_label")).count()
-        labels = jumped.select("node", "label")
+        changed = ck.filter(F.col("label") != F.col("old_label")).count()
+        labels = ck.select("node", "label")
         if changed == 0:
             break
     else:
@@ -763,9 +769,8 @@ def dedup_clusters(
             f"dedup_clusters did not converge in {max_iter} rounds "
             f"({changed} labels still changing); raise max_iter for this graph"
         )
-    from streaming_feature_store_spark.cacheutil import track_checkpoint_ids
-
-    track_checkpoint_ids(labels.sparkSession, _lbl_ids)
+    # the labels no longer read the edges: free them now, not at release
+    release_checkpoint(edges)
     return labels.select("node", F.col("label").alias("cluster_id"))
 
 

@@ -78,7 +78,7 @@ def pagerank(
     )
 
     ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-    _ck_ids: list[int] = []
+    ck = None
     for i in range(iterations):
         dangling = (
             ranks.join(sources, "node", "left_anti")
@@ -110,16 +110,11 @@ def pagerank(
         # O(rounds x nodes): each new checkpoint frees the superseded
         # round's blocks immediately instead of waiting for JVM GC.
         if (i + 1) % checkpoint_every == 0 or i + 1 == iterations:
-            ranks, _ck_ids = rolling_local_checkpoint(ranks, _ck_ids)
+            ranks = ck = rolling_local_checkpoint(ranks, ck)
     for f in (e, norm, nodes, sources):
         f.unpersist()
-    # register the FINAL round's checkpoint for explicit release — a
-    # long-lived session calling pagerank repeatedly must not leak one
-    # O(nodes) checkpoint per call until GC (consume the result before
-    # release_checkpoints()/release_all(), per the cacheutil contract)
-    from streaming_feature_store_spark.cacheutil import track_checkpoint_ids
-
-    track_checkpoint_ids(ranks.sparkSession, _ck_ids)
+    # the FINAL round's checkpoint stays tracked: consume the result
+    # before release_checkpoints()/release_all() (the cacheutil contract)
     return ranks
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.functions import broadcast
 
 from streaming_feature_store_spark import commit
+from streaming_feature_store_spark.cacheutil import local_checkpoint_tracked
 from streaming_feature_store_spark.functions.exprs import dsum
 from streaming_feature_store_spark.operators.asof import asof_join
 from streaming_feature_store_spark.operators.sessions import funnel_features
@@ -59,32 +60,6 @@ def query(name: str, sql: str | None = None):
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
-
-
-def _adopt_parquet_dir(spark: SparkSession, src_dir: str) -> DataFrame:
-    """Localize a lifecycle query's parquet result OUT of its
-    about-to-be-deleted uuid temp root: move the committed dir to its own
-    temp location (removed at interpreter exit) and read it back.
-
-    r13 (VERDICT r12 "what's wrong" #5): the lifecycle oracles previously
-    severed lineage with ``spark.createDataFrame(out.collect(), schema)``
-    — a driver-side collect in a query path, delta/vocabulary-bounded
-    here but the wrong shape at a real scale factor.  A filesystem move
-    is O(1) metadata, the returned frame is a plain parquet scan, and
-    values/schema are identical (the collect was reading this same
-    parquet)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    dst = os.path.join(
-        tempfile.gettempdir(), f"sfs_localized_{uuid.uuid4().hex}"
-    )
-    shutil.move(src_dir, dst)
-    atexit.register(shutil.rmtree, dst, ignore_errors=True)
-    return spark.read.parquet(dst)
 
 
 # ---------------------------------------------------------------------------
@@ -10263,10 +10238,10 @@ def q224_ivf_persisted_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     does for the build-per-call path.  The index lives under a
     per-invocation UNIQUE temp path (uuid suffix — two concurrent harness
     runs at the same sf can never interleave save → append → read on a
-    shared directory, VERDICT r9 finding #2), the bounded k×|queries|
-    result is localized before the path is deleted, and the directory is
-    removed before returning so repeated invocations leave nothing
-    behind."""
+    shared directory, VERDICT r9 finding #2), the result is a tracked
+    local checkpoint (``cacheutil.local_checkpoint_tracked``), so its
+    lineage no longer reads the path, and the directory is removed before
+    returning so repeated invocations leave nothing behind."""
     import os
     import shutil
     import tempfile
@@ -10292,9 +10267,7 @@ def q224_ivf_persisted_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = ivf_topk_persisted(
             spark, path, base.filter(F.col("vec_id") < 10), k=1, nprobe=4
         )
-        # localize the (k × 10 queries)-row result so the lineage no
-        # longer references the about-to-be-deleted files
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_checkpoint_tracked(out)
     finally:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -11537,7 +11510,7 @@ def q242_bm25_persisted_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_r11_ops.py).  Oracle = q237's full recompute, pinning
     save → load → score ≡ bm25_topk.  Tables/paths are uuid-unique per
     invocation and dropped before returning (the q224 lifecycle
-    discipline); the bounded k×|queries| result is localized first."""
+    discipline); the result is checkpointed first."""
     import os
     import shutil
     import tempfile
@@ -11578,10 +11551,9 @@ def q242_bm25_persisted_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
             "query_id string, query_text string",
         )
-        out = bm25_from_index(tf, stats, qdf, k=5, doc_lengths=dl)
-        # localize the bounded (k × 4 queries) result so the lineage no
-        # longer references the about-to-be-dropped tables
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_checkpoint_tracked(
+            bm25_from_index(tf, stats, qdf, k=5, doc_lengths=dl)
+        )
     finally:
         drop_postings_index(spark, name)
         shutil.rmtree(path, ignore_errors=True)
@@ -11747,7 +11719,7 @@ def q244_daily_ingest_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     must never consume shingle work or end up a near-dup's best match).
     Oracle recomputes both tiers from scratch (md5 against the base
     fingerprint set; exact all-pairs jaccard over base + surviving
-    delta).  State lives under a uuid temp root, result localized,
+    delta).  State lives under a uuid temp root, result checkpointed,
     root deleted (the q224 lifecycle discipline)."""
     import os
     import shutil
@@ -11772,19 +11744,18 @@ def q244_daily_ingest_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         # signatures indexed; day 1 pays the real screen
         daily_ingest(base, root, bigrams=False, screen_near_dups=False)
         daily_ingest(delta, root, bigrams=False)
-        # localize day 1's report (the newest committed reports/v= dir)
-        # through a filesystem move instead of a driver collect — the
-        # scale-correct lineage cut (r13; _adopt_parquet_dir docstring)
-        return commit.read_newest(
-            f"{root}/reports", lambda d: _adopt_parquet_dir(spark, d)
-        ).select(
-            "doc_id",
-            "is_exact_dup",
-            "is_near_dup",
-            "best_match_id",
-            "best_jaccard",
-            "match_in_index",
-            "kept",
+        # day 1's report: the newest committed reports/v= dir
+        report = commit.read_newest(f"{root}/reports", spark.read.parquet)
+        return local_checkpoint_tracked(
+            report.select(
+                "doc_id",
+                "is_exact_dup",
+                "is_near_dup",
+                "best_match_id",
+                "best_jaccard",
+                "match_in_index",
+                "kept",
+            )
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -11828,7 +11799,7 @@ def q245_daily_erase_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes (docs/df/uni) counts from scratch over the surviving
     documents — erase ≡ rebuild-over-survivors, the governance
     contract.  State under a uuid temp root, vocabulary-bounded result
-    localized, root deleted (the q224 lifecycle discipline)."""
+    checkpointed, root deleted (the q224 lifecycle discipline)."""
     import os
     import shutil
     import tempfile
@@ -11847,10 +11818,8 @@ def q245_daily_erase_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         erased = docs.filter(F.col("doc_id") % 13 == 0)
         retained = docs.filter(F.col("doc_id") % 13 != 0)
         daily_erase(erased, root, corpus=retained)
-        # filesystem-move localization (r13; _adopt_parquet_dir docstring)
-        return commit.read_newest(
-            f"{root}/stats", lambda d: _adopt_parquet_dir(spark, d)
-        ).select("kind", "term", "n")
+        stats = commit.read_newest(f"{root}/stats", spark.read.parquet)
+        return local_checkpoint_tracked(stats.select("kind", "term", "n"))
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -11917,7 +11886,7 @@ def q246_compacted_ingest_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery, and the screen ladder has its own oracle (q244).  The
     oracle recomputes BM25 over the union corpus from scratch: append ∘
     compact ∘ read ≡ one-shot postings + stats build.  State under a
-    uuid temp root, bounded k×4 result localized, root deleted."""
+    uuid temp root, result checkpointed, root deleted."""
     import os
     import shutil
     import tempfile
@@ -11955,7 +11924,8 @@ def q246_compacted_ingest_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
             "query_id string, query_text string",
         )
-        out = bm25_from_index(postings, stats, qdf, k=5)
-        return spark.createDataFrame(out.collect(), out.schema)
+        return local_checkpoint_tracked(
+            bm25_from_index(postings, stats, qdf, k=5)
+        )
     finally:
         shutil.rmtree(root, ignore_errors=True)

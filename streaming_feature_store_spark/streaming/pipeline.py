@@ -21,8 +21,6 @@ state is RocksDB-backed and watermark-evicted on a real cluster.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -90,7 +88,6 @@ def start_feature_pipeline(
     entity_col: str = "user_id",
     checkpoint: str | None = None,
     trigger_available_now: bool = True,
-    transform: Callable[[DataFrame], DataFrame] | None = None,
 ):
     """Wire source → features → foreachBatch(upsert latest, append log).
 
@@ -98,7 +95,7 @@ def start_feature_pipeline(
     the batch/replay/backfill mode (T11): the SAME pipeline function is the
     backfill job, pointed at historical files.
     """
-    feats = (transform or windowed_features)(events, entity_col=entity_col)
+    feats = windowed_features(events, entity_col=entity_col)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # the upsert's first action fills the cache: one stateful pass

@@ -4,18 +4,19 @@ joins and produce a training frame identical to the batch read over the
 raw events — the online/offline parity the reference's feature store
 exists to guarantee (feast/feature_utils.py:170-232).
 
-Two views are materialized by a single file-stream job (foreachBatch):
+Two views are materialized by a single file-stream job (foreachBatch),
+each written through ``sinks.write_batch`` (one ``_batch=<id>`` partition
+per micro-batch, which a replayed batch replaces — T5), and read with no
+dedup:
 
-- the event-grain raw-value view — an append log of feature rows keyed by
-  ``batch_id`` (replayed micro-batches dedup at read time, T5);
+- the event-grain raw-value view — the batch's feature rows;
 - the daily-aggregate view — per-batch (user, day, n, v_sum) PARTIALS with
-  decimal-exact sums, merged at read time (the same mergeable-summary
-  contract as ``streaming/sketches.daily_metric_stream``), each day's row
-  becoming available only at the FOLLOWING midnight (no leakage).
+  decimal-exact sums, merged at read time, each day's row becoming
+  available only at the FOLLOWING midnight (no leakage).
 
 The batch twin derives both views directly from the full raw frame and
 runs the identical ``asof_join`` chain.  Sets must match exactly — and a
-replayed partial must change nothing.
+replayed micro-batch must change nothing.
 """
 
 import pytest
@@ -26,7 +27,14 @@ import pyspark.sql.functions as F
 
 from streaming_feature_store_spark.operators.asof import asof_join
 from streaming_feature_store_spark.streaming.pipeline import read_file_stream
-from tests.test_streaming import BASE, SCHEMA, _write_batch
+from streaming_feature_store_spark.streaming.sinks import write_batch
+from tests.test_streaming import (
+    BASE,
+    SCHEMA,
+    _log_rows,
+    _replay_last_batch,
+    _write_batch,
+)
 
 
 def _views_from(ev):
@@ -122,42 +130,37 @@ def test_streaming_feature_service_read_matches_batch(spark, tmp_path):
     def sink(batch_df, batch_id):
         if batch_df.isEmpty():
             return
-        tagged = batch_df.withColumn("batch_id", F.lit(batch_id))
-        tagged.write.mode("append").parquet(ev_log)
-        (
-            tagged.withColumn("day", F.to_date("ts"))
+        write_batch(batch_df, ev_log, batch_id)
+        write_batch(
+            batch_df.withColumn("day", F.to_date("ts"))
             .groupBy("user_id", "day")
             .agg(
                 F.count("*").alias("n"),
                 F.sum(F.col("value").cast("decimal(18,4)")).alias("v_sum"),
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(daily_log)
+            ),
+            daily_log,
+            batch_id,
         )
 
-    stream = read_file_stream(spark, src, SCHEMA, max_files_per_trigger=1)
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
+    def start():
+        stream = read_file_stream(spark, src, SCHEMA, max_files_per_trigger=1)
+        return (
+            stream.writeStream.outputMode("append")
+            .foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+
     # availableNow guarantees termination; assert the bounded wait so a
     # loaded host fails as a clear timeout, not a partial-data mismatch
-    assert q.awaitTermination(120), "stream did not drain within 120 s"
+    assert start().awaitTermination(120), "stream did not drain within 120 s"
 
     def read_streamed():
-        streamed_ev = (
-            spark.read.parquet(ev_log)
-            .dropDuplicates(["event_id"])
-            .drop("batch_id")
-        )
+        streamed_ev = spark.read.parquet(ev_log).drop("_batch")
         labels, feat_a = _views_from(streamed_ev)
         daily = (
             spark.read.parquet(daily_log)
-            .dropDuplicates(["user_id", "day", "batch_id"])
             .groupBy("user_id", "day")
             .agg(
                 F.sum("n").alias("daily_cnt"),
@@ -197,10 +200,9 @@ def test_streaming_feature_service_read_matches_batch(spark, tmp_path):
         r[4] is None and r[5] is None for r in first_day_nulls
     )
 
-    # replay: duplicate some partials/log rows -> read unchanged (dedup on
-    # event_id / (user, day, batch_id) makes re-processed batches no-ops)
-    spark.read.parquet(ev_log).limit(20).write.mode("append").parquet(ev_log)
-    spark.read.parquet(daily_log).limit(3).write.mode("append").parquet(
-        daily_log
-    )
+    # replay the last micro-batch for real: both logs keep one partition
+    # per batch with the same rows, and the read is unchanged
+    daily_before = _log_rows(spark, daily_log)
+    _replay_last_batch(spark, start, ckpt, ev_log)
+    assert _log_rows(spark, daily_log) == daily_before
     assert {tuple(r) for r in read_streamed().collect()} == want

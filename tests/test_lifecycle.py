@@ -146,9 +146,9 @@ def test_negative_sample_checkpoint_released(spark):
 
 
 def test_checkpoint_tracking_does_not_steal_caller_caches(spark):
-    """The checkpoint-id capture must not claim a caller's cold cache
-    that the eager checkpoint job happens to materialize — releasing
-    must leave the caller's persisted frame cached."""
+    """Tracking must not claim a caller's cold cache that the eager
+    checkpoint job happens to materialize — releasing must leave the
+    caller's persisted frame cached."""
     from streaming_feature_store_spark.cacheutil import (
         local_checkpoint_tracked,
         release_all,
@@ -171,11 +171,9 @@ def test_checkpoint_tracking_does_not_steal_caller_caches(spark):
 
 
 def test_concurrent_checkpoint_tracking_is_serialized(spark):
-    """ADVICE r6: the snapshot+checkpoint+capture bracket must hold a
-    lock — concurrent tracked checkpoints from other driver threads
-    (the streaming foreachBatch pattern) previously raced the storage
-    delta and could claim (then free) a live frame's blocks. With the
-    lock, N concurrent calls capture exactly N checkpoint ids, every
+    """Concurrent tracked checkpoints from other driver threads (the
+    streaming foreachBatch pattern) must each register their own RDD and
+    no other: N concurrent calls register exactly N checkpoint ids, every
     frame stays consumable until release, and release frees them all."""
     from concurrent.futures import ThreadPoolExecutor
 
@@ -205,3 +203,35 @@ def test_concurrent_checkpoint_tracking_is_serialized(spark):
     assert released == 16, released
     after = {i.id() for i in sc.getRDDStorageInfo()} - before
     assert not after, f"leaked checkpoint blocks: {after}"
+
+
+def test_rolling_checkpoints_leave_one_rdd(spark):
+    """``pagerank`` and ``dedup_clusters``' distributed path free every
+    superseded checkpoint as they go (the dedup edges' too), so each
+    leaves exactly one RDD cached, its result's checkpoint, and
+    ``release_all()`` frees that one."""
+    from streaming_feature_store_spark.cacheutil import release_all
+    from streaming_feature_store_spark.operators.dedup import dedup_clusters
+    from streaming_feature_store_spark.operators.graph import pagerank
+
+    spark.catalog.clearCache()
+    release_all()
+    sc = spark.sparkContext._jsc.sc()
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(6)] + [(10, 11)], "src long, dst long"
+    )
+    runs = {
+        "pagerank": lambda: pagerank(edges, iterations=3),
+        "dedup_clusters": lambda: dedup_clusters(
+            edges.toDF("doc_a", "doc_b"), driver_threshold=0
+        ),
+    }
+    for name, run in runs.items():
+        before = {i.id() for i in sc.getRDDStorageInfo()}
+        out = run()
+        assert out.count() == 9, name
+        held = [i.name() for i in sc.getRDDStorageInfo() if i.id() not in before]
+        assert held == ["MapPartitionsRDD"], (name, held)
+        assert release_all() == 1, name
+        after = [i.id() for i in sc.getRDDStorageInfo() if i.id() not in before]
+        assert not after, (name, after)

@@ -276,6 +276,27 @@ def test_model_bundle_after_observation(spark, tmp_path):
     assert score(loaded, df).select("id", "score").collect() == want
 
 
+def test_cross_validate_after_observation(spark):
+    """``cross_validate`` in a session that has used an ``Observation``:
+    its fold models and best model are fitted through a pipeline that
+    drops each stage's training summary, so the evaluator's transform
+    (and a caller's own ``transform`` of the best model) never serializes
+    the session (``NotSerializableException: ObservationManager``)."""
+    from streaming_feature_store_spark.ml.training import cross_validate
+    from streaming_feature_store_spark.streaming.watermarks import (
+        with_observation,
+    )
+
+    df = _dataset(spark, 300)
+    observed, obs = with_observation(df, "cv_rows", {"n": F.count(F.lit(1))})
+    assert observed.count() == 300
+    assert obs.get["n"] == 300
+    cfg = TrainConfig(feature_cols=["f1", "f2"], algorithm="lr")
+    result = cross_validate(df, cfg, num_folds=2)
+    assert 0.8 < result["cv_auc"] <= 1.0
+    assert result["model"].transform(df).count() == 300
+
+
 def test_train_with_hashed_categoricals(spark):
     """encoder="hash": the FeatureHasher path must carry the categorical's
     signal without any fitted label map (stateless hashing trick), and the
