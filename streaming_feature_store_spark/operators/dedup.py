@@ -709,14 +709,12 @@ def dedup_clusters(
     # instead of O(rounds x nodes)-until-GC. The chain runs stepped ->
     # jumped -> next stepped; the FINAL jumped stays (the returned frame
     # reads it), and the edges are freed once the loop ends.
-    ck = rolling_local_checkpoint(
+    labels = ck = local_checkpoint_tracked(
         edges.select(F.col("a").alias("node"))
         .distinct()
         .repartition(parts, "node")
-        .withColumn("label", F.col("node")),
-        None,
+        .withColumn("label", F.col("node"))
     )
-    labels = ck
     changed = -1  # max_iter=0 must raise the diagnostic, not NameError
     for _ in range(max_iter):
         nbr_min = (
